@@ -11,13 +11,16 @@ import org.apache.spark.sql.functions._
   * - Strict mode (A4, `get_precip_mode_or_nan` at
   *   v5_group_project_dag.py:145-153): any tie among max counts → NULL.
   *
-  * Spark's built-in `mode` is nondeterministic on ties, so both are custom.
-  * Default implementation is a relational count+max plan (scales: two
-  * hash aggregates + one window over the small per-(key,value) count
-  * relation — cardinality = |keys| × |distinct values|, not |rows|).
-  * A typed `Aggregator` twin is provided for the UDAF surface; its buffer
-  * is a value→count map, fine for low-cardinality values (the reference's
-  * precip type has ~3) but the relational plan is the scale path.
+  * Spark's built-in `mode` breaks ties arbitrarily unless asked for
+  * deterministic ties (`mode(c, true)`: the lowest value, = A3) and has no
+  * strict form. The frame forms here are a relational count+max plan
+  * (scales: two hash aggregates + one window over the small
+  * per-(key,value) count relation — cardinality = |keys| × |distinct
+  * values|, not |rows|). The typed `Aggregator` twins fit in one
+  * aggregate beside other aggregates (`Weather.monthly` uses the strict
+  * one); their buffer is a value→count map, fine for low-cardinality
+  * values (the reference's precip type has ~3) but the relational plan is
+  * the scale path.
   */
 object Aggregates {
 
@@ -85,18 +88,13 @@ object Aggregates {
 
   /** A1 literal form: grouped means broadcast back to rows (pandas
     * `groupby().transform('mean')`) — a window aggregate. The composed
-    * project+distinct pipeline collapses to plain groupBy means; both forms
-    * are exposed so callers pick the cheaper one.
+    * project+distinct pipeline collapses to plain groupBy means, which
+    * `Weather.daily`/`monthly` use.
     */
   def windowMeans(df: DataFrame, keys: Seq[String], measures: Map[String, String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
     measures.foldLeft(df) { case (d, (src, out)) =>
       d.withColumn(out, avg(col(src)).over(w))
     }
-  }
-
-  def groupedMeans(df: DataFrame, keys: Seq[String], measures: Map[String, String]): DataFrame = {
-    val aggs = measures.map { case (src, out) => avg(col(src)).as(out) }.toSeq
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -90,8 +90,19 @@ object Cleaning {
     * closest distributed equivalent of pandas keep='first'.
     */
   def dedupKeepFirstFileOrder(df: DataFrame, keys: Seq[String]): DataFrame =
-    dedupKeepFirst(df.withColumn("__ord", monotonically_increasing_id()), keys, Seq(col("__ord")))
+    flagFirstInFileOrder(df, keys, "__first").filter(col("__first")).drop("__first")
+
+  /** D1 without dropping: adds boolean `flag`, true on the first row of
+    * each key in file order (the rows [[dedupKeepFirstFileOrder]] keeps).
+    * For callers that need every row before the dedup (a median over all
+    * rows) and only the kept rows after, from one window pass.
+    */
+  def flagFirstInFileOrder(df: DataFrame, keys: Seq[String], flag: String): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__ord"))
+    df.withColumn("__ord", monotonically_increasing_id())
+      .withColumn(flag, row_number().over(w) === 1)
       .drop("__ord")
+  }
 
   /** P9: drop rows with nulls in `cols` — the INTENDED semantics of v1's
     * `df[c] = df[c].dropna()` (group_project_dag.py:129), which is a

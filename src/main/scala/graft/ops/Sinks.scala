@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Sinks (S3/S4/S5). The reference lands single CSV files and appends into
@@ -28,6 +29,29 @@ object Sinks {
   def parquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+  }
+
+  /** All-or-nothing publish of several parquet tables under `outDir`:
+    * each frame is written to `outDir/_staging-<uuid>/<name>`, `accept`
+    * runs once every write has landed (it throws to refuse), and only
+    * then is each staged table renamed over `outDir/<name>`. A failed
+    * write or a refusal leaves every existing table as it was; the
+    * staging directory is removed either way.
+    */
+  def publishParquet(outDir: String, tables: Seq[(String, DataFrame)])(accept: () => Unit): Unit = {
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(tables.head._2.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new Path(out, s"_staging-${java.util.UUID.randomUUID()}")
+    try {
+      tables.foreach { case (name, df) => parquet(df, new Path(stage, name).toString) }
+      accept()
+      tables.foreach { case (name, _) =>
+        val target = new Path(out, name)
+        fs.delete(target, true)
+        if (!fs.rename(new Path(stage, name), target))
+          throw new java.io.IOException(s"could not publish $target")
+      }
+    } finally fs.delete(stage, true)
   }
 
   /** JSON-lines sink (one object per line — the interchange format most

@@ -75,10 +75,12 @@ object Validate {
   /** Zero-extra-pass variant via the Observation API: checks ride along
     * with whatever action consumes the returned DataFrame (the write
     * itself), instead of [[gate]]'s separate validation scan. Call the
-    * returned thunk AFTER the action to get failures — suited to
-    * validate-while-writing flows where a quarantine step handles
-    * failures post-hoc; use [[gate]] when nothing may be written on
-    * violation (the reference's all_success semantics).
+    * returned thunk only AFTER that action succeeded (it waits for the
+    * action's metrics). The reference's all_success semantics (nothing
+    * visible on violation) then come from writing to a staging area and
+    * publishing only when the thunk reports no failures
+    * (`Sinks.publishParquet`, as `Weather.run` does); [[gate]] gets them
+    * by checking before the write, at the cost of its own pass.
     */
   def observed(df: DataFrame, checks: Seq[Check], name: String = "graft_checks"): (DataFrame, () => Seq[CheckResult]) = {
     val obs = org.apache.spark.sql.Observation(name)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 class AggregatesSpec extends SparkSuite {
@@ -27,6 +28,18 @@ class AggregatesSpec extends SparkSuite {
   test("all-null group is absent (pandas value_counts drops NaN)") {
     val allNull = Seq(("g", null.asInstanceOf[String])).toDF("k", "v")
     assert(Aggregates.modeDeterministic(allNull, Seq("k"), "v", "m").count() == 0)
+    // the one-aggregate forms keep the group, with a NULL mode
+    val agg = allNull.groupBy("k")
+      .agg(mode($"v", deterministic = true), udaf(Aggregates.modeStrictAgg, Encoders.STRING)($"v"))
+      .collect()
+    assert(agg.length == 1 && agg(0).isNullAt(1) && agg(0).isNullAt(2))
+  }
+
+  test("built-in deterministic mode equals modeDeterministic (ties → smallest, NULLs skipped)") {
+    val det = df.groupBy("k").agg(mode($"v", deterministic = true))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(det == Aggregates.modeDeterministic(df, Seq("k"), "v", "m")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
   }
 
   test("typed Aggregator UDAF twins agree with the relational plans") {

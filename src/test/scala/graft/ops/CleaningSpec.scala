@@ -61,4 +61,15 @@ class CleaningSpec extends SparkSuite {
       .orderBy("k").collect().map(_.getString(2))
     assert(out.toSeq == Seq("first", "only"))
   }
+
+  test("flagFirstInFileOrder flags the first row per key in file order; the dedup keeps those") {
+    val df = Seq(("a", "first"), ("b", "only"), ("a", "second"), ("a", "third"))
+      .toDF("k", "tag").coalesce(1)
+    val flagged = Cleaning.flagFirstInFileOrder(df, Seq("k"), "keep")
+    assert(flagged.columns.toSeq == Seq("k", "tag", "keep"))
+    assert(flagged.collect().map(r => r.getString(1) -> r.getBoolean(2)).toMap ==
+      Map("first" -> true, "only" -> true, "second" -> false, "third" -> false))
+    assert(Cleaning.dedupKeepFirstFileOrder(df, Seq("k")).orderBy("k").collect()
+      .map(_.getString(1)).toSeq == Seq("first", "only"))
+  }
 }
