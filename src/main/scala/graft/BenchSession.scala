@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared session builder for the builder-side measurement and generator
   * mains (BenchOne/BenchSet/BenchRecall/BenchDrift/BenchRefresh/
-  * BenchServe/BenchKnob, GenScale/GenClustered) — one place for the
+  * BenchServe, GenScale/GenClustered) — one place for the
   * local[cpus] + shuffle-width + UTC config they all repeated, and for
   * the scan-parallelism knob the sf10 sweeps need:
   *

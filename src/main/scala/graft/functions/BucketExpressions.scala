@@ -8,18 +8,17 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Native coarse-cell bucket assignment: the number of `bounds` entries
-  * strictly below the input value — i.e. the cell id the PrefixSum/
-  * exactNtile lattice machinery assigns.
+/** Native cell assignment: the number of `bounds` entries strictly below
+  * the input value — i.e. the cell id `graft.ops.CellLayout` assigns for
+  * every exact rank, ntile, percentile and running sum.
   *
   * The composed-Column form (`bounds.map(b => when(v > b, 1, 0))
   * .reduce(_ + _)`) is O(cells) comparisons PER ROW and, worse, a
   * cells-deep expression tree: measured on the q309 pipeline at sf10
-  * (500k docs), raising coarseCells 16 → 64 → 256 scaled wall time
+  * (500k docs), raising the cell count 16 → 64 → 256 scaled wall time
   * 3.0 → 8.9 → 17.2 s — the assignment expression, not the data, was the
-  * cost, which inverts the knob's whole purpose (coarseCells must rise
-  * with the CLUSTER; a 4096-cell production setting would pay a
-  * 4096-branch chain per row and likely blow the codegen method limit).
+  * cost; the layout's cap of 4096 cells would pay a 4096-branch chain per
+  * row and likely blow the codegen method limit.
   * This expression is one `Arrays.binarySearch` over a broadcast-embedded
   * sorted double[] — O(log cells) per row, constant codegen size.
   *

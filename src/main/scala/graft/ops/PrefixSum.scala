@@ -11,25 +11,16 @@ import org.apache.spark.sql.functions._
   * Spark's planner has no countermeasure because the partition count is a
   * data property, not a plan property.
   *
-  * Same machinery as [[Quantiles.exactNtile]], generalized from ranks to
-  * running aggregates:
-  *
-  *   1. ONE `approxQuantile` pass over the (direction-normalized) ORDER BY
-  *      key picks ~`coarseCells` GLOBAL boundaries (approximate — they
-  *      only balance load; membership and order never depend on them);
-  *   2. each row gets a coarse cell id (monotone in the sort key, so
-  *      within every partition key the cells are contiguous runs of the
-  *      window order);
-  *   3. per-(key, cell) subtotals — an ordinary hash aggregate — feed a
-  *      window over the SUBTOTAL relation (≤ coarseCells rows per key:
-  *      bounded by construction) that yields each cell's exclusive
-  *      offset; the offsets relation (|keys|·coarseCells rows — the
-  *      low-cardinality contract keeps it broadcastable) is broadcast
-  *      back;
-  *   4. an in-(key, cell) window adds the within-cell running aggregate:
-  *      offset + in-cell prefix = exact global-in-partition prefix. The
-  *      largest task is ~N/(|keys|·coarseCells) rows; `coarseCells` is a
-  *      LOAD parameter — raise it with the cluster (64 matches local[32]).
+  * Same [[CellLayout]] kernel as [[Quantiles.exactNtile]], generalized
+  * from ranks to running aggregates: cells are contiguous runs of the
+  * (direction-normalized) ORDER BY key within every partition key; the
+  * per-(key, cell) subtotals' exclusive prefixes (a window over ≤ cells
+  * rows per key) join back onto the rows, and an in-(key, cell) window
+  * adds the within-cell running aggregate: prefix + in-cell running
+  * aggregate = exact global-in-partition running aggregate. The largest
+  * task sorts one (key, cell): at most N/64 rows of a key below
+  * 64·RowsPerCell rows, about RowsPerCell past that, whatever the
+  * partition key's size.
   *
   * Exactness: sums regroup additions, so they are exact for integral and
   * DECIMAL `value` types (the battery's users sum token counts — longs);
@@ -47,7 +38,7 @@ object PrefixSum {
     * codepoints clamp at 255, so the pack is monotone in the string's
     * UTF-8 byte order wherever codepoints stay < 255 and COLLAPSES (same
     * cell — always safe) beyond. Use as [[exclusiveSum]]'s `cellKey` for
-    * string window orders (approxQuantile can't summarize strings).
+    * string window orders (the boundary grid cannot summarize strings).
     *
     * ADVERSARIAL COLLAPSE (pinned in PrefixSumSpec): a corpus whose
     * strings are IDENTICAL through byte `from+n-1` (shared boilerplate
@@ -93,7 +84,7 @@ object PrefixSum {
 
   /** Preflight diagnostic for [[exclusiveSum]]/[[rank]] cell layouts: the
     * per-(key, cell) row counts the given `cellKey` surrogate would
-    * produce — same approxQuantile bounds, same cell assignment, ONE
+    * produce — same layout and cell assignment, ONE
     * aggregate scan. Run it (sampled) when choosing a [[packAscii]]
     * offset for a new corpus: `max(n_rows)` is the largest single-task
     * window the layout will pay; a hot boilerplate prefix shows up here
@@ -108,20 +99,11 @@ object PrefixSum {
     */
   def cellLoad(
       df: DataFrame, keys: Seq[String], cellKey: Column,
-      coarseCells: Int = 64, ascending: Boolean = true): DataFrame = {
-    val surrogate = if (ascending) cellKey.cast("double") else negate(cellKey.cast("double"))
-    val keyed = df.withColumn("__pv", surrogate)
-    val probs = (1 until coarseCells).map(_.toDouble / coarseCells).toArray
-    val bounds =
-      if (coarseCells <= 1) Array.empty[Double]
-      else keyed.stat.approxQuantile("__pv", probs, 0.001)
-        .map(_ + 0.0) // -0.0 -> 0.0 BEFORE distinct: CellBucket.search requires distinct bounds
-        .distinct.sorted
-    keyed
-      .withColumn("__pc", Quantiles.cellOf(df.sparkSession, col("__pv"), bounds, "PrefixSum"))
-      .groupBy((keys :+ "__pc").map(col): _*)
-      .agg(count(lit(1)).as("n_rows"))
-      .withColumnRenamed("__pc", "cell")
+      ascending: Boolean = true): DataFrame = {
+    val keyed = df.withColumn("__pv", CellLayout.surrogate(cellKey, ascending))
+    val Seq(layout) = CellLayout.of(keyed, Seq(col("__pv")), "PrefixSum")
+    layout.totals(layout.cellOf(keyed, col("__pv")), keys)
+      .select((keys.map(col) :+ col(CellLayout.Cell).as("cell") :+ col("__pn").as("n_rows")): _*)
   }
 
   /** Exclusive running sum of `value` (and optionally the exact 1-based
@@ -147,64 +129,39 @@ object PrefixSum {
       df: DataFrame, keys: Seq[String],
       order: Column, ascending: Boolean, ties: Seq[Column],
       value: Column, outSum: String, outRank: Option[String] = None,
-      coarseCells: Int = 64, cellKey: Option[Column] = None,
+      cellKey: Option[Column] = None,
       broadcastOffsets: Boolean = true): DataFrame = {
     require(keys.nonEmpty,
       "empty partition keys: use Quantiles.exactNtile-style global machinery")
-    val qv = cellKey match {
-      case Some(k) => if (ascending) k.cast("double") else negate(k.cast("double"))
-      case None => if (ascending) order.cast("double") else negate(order.cast("double"))
-    }
+    val qv = CellLayout.surrogate(cellKey.getOrElse(order), ascending)
     // null values contribute 0, exactly like the window sum skipping them
     // (the twin `sum(value).over(...preceding,-1)` ignores nulls; the
     // inclusive-minus-current trick below would otherwise null the row)
     //
-    // Ckpt BEFORE the eager approxQuantile pass (r16): the input lineage
-    // is consumed THREE times — the boundary scan below, the subtotal
-    // branch, and the celled side of the offsets join — and without a
-    // materialization point each consumer recomputes the caller's whole
-    // upstream plan (q283's rank rollup re-ran its lineitem scan+agg 3×
-    // per call; the plan showed 5 lineitem scans for 2 rank calls).
+    // Ckpt BEFORE the eager boundary pass: the input lineage is consumed
+    // up to three times — the boundary pass, the subtotal branch, and the
+    // celled side of the offsets join — and without a materialization
+    // point each consumer recomputes the caller's whole upstream plan.
     // One localCheckpoint (reliable checkpoint under graft.checkpoint.dir
     // — the Ckpt production switch) pays the input once.
-    val keyed = Ckpt(df.withColumn("__pval", coalesce(value, lit(0)))
+    val Value = CellLayout.Value
+    val keyed = Ckpt(df.withColumn(Value, coalesce(value, lit(0)))
       .withColumn("__pv", qv))
-    val probs = (1 until coarseCells).map(_.toDouble / coarseCells).toArray
-    val bounds =
-      if (coarseCells <= 1) Array.empty[Double]
-      else keyed.stat.approxQuantile("__pv", probs, 0.001)
-        .map(_ + 0.0) // -0.0 -> 0.0 BEFORE distinct: CellBucket.search requires distinct bounds
-        .distinct.sorted
-    val celled = keyed
-      .withColumn("__pc", Quantiles.cellOf(df.sparkSession, col("__pv"), bounds, "PrefixSum"))
-      .drop("__pv")
-    val kc = (keys :+ "__pc").map(col)
-    // per-(key, cell) subtotals: data-sized scan → |keys|·cells rows
-    val sub = celled.groupBy(kc: _*)
-      .agg(sum(col("__pval")).as("__psub"), count(lit(1)).as("__pn"))
-    // exclusive cell offsets: a window over the SUBTOTAL relation — every
-    // partition holds ≤ coarseCells rows (bounded by construction, not by
-    // whitelist)
-    val wOff = Window.partitionBy(keys.map(col): _*).orderBy(col("__pc").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = sub.select(
-      kc ++ Seq(
-        coalesce(sum(col("__psub")).over(wOff), lit(0L)).as("__poff"),
-        coalesce(sum(col("__pn")).over(wOff), lit(0L)).as("__proff")): _*)
+    val Seq(layout) = CellLayout.of(keyed, Seq(col("__pv")), "PrefixSum")
+    val celled = layout.cellOf(keyed, col("__pv")).drop("__pv")
+    val joined = layout.withPrefixes(celled, keys, broadcastTotals = broadcastOffsets)
     val inOrd = (if (ascending) order.asc else order.desc) +: ties.map(_.asc)
-    val wIn = Window.partitionBy(kc: _*).orderBy(inOrd: _*)
-    val joined = celled.join(
-      if (broadcastOffsets) broadcast(offs) else offs, keys :+ "__pc")
+    val wIn = Window.partitionBy((keys :+ CellLayout.Cell).map(col): _*).orderBy(inOrd: _*)
     // inclusive-minus-current instead of an exclusive frame: the inclusive
     // frame is never null, so no type-widening coalesce enters the sum
-    val incl = sum(col("__pval")).over(wIn.rowsBetween(Window.unboundedPreceding, 0))
-    val summed = joined.withColumn(outSum, col("__poff") + incl - col("__pval"))
+    val incl = sum(col(Value)).over(wIn.rowsBetween(Window.unboundedPreceding, 0))
+    val summed = joined.withColumn(outSum, col("__psumoff") + incl - col(Value))
     val ranked = outRank match {
       case Some(r) =>
-        summed.withColumn(r, col("__proff") + row_number().over(wIn).cast("long"))
+        summed.withColumn(r, col("__pnoff") + row_number().over(wIn).cast("long"))
       case None => summed
     }
-    ranked.drop("__pval", "__pc", "__poff", "__proff")
+    ranked.drop(Value, CellLayout.Cell, "__pnoff", "__psumoff", "__pmaxoff")
   }
 
   /** Exact per-partition `row_number` alone (q58's rank-derived window
@@ -213,61 +170,36 @@ object PrefixSum {
   def rank(
       df: DataFrame, keys: Seq[String],
       order: Column, ascending: Boolean, ties: Seq[Column],
-      out: String, coarseCells: Int = 64, cellKey: Option[Column] = None,
+      out: String, cellKey: Option[Column] = None,
       broadcastOffsets: Boolean = true): DataFrame =
     exclusiveSum(df, keys, order, ascending, ties, lit(1L), "__prank_sum",
-      Some(out), coarseCells, cellKey, broadcastOffsets).drop("__prank_sum")
+      Some(out), cellKey, broadcastOffsets).drop("__prank_sum")
 
   /** GLOBAL exclusive running max of a LONG `value` ordered by `order`
     * ascending — `max(value).over(Window.orderBy(order).rowsBetween(
     * unboundedPreceding, -1))` (null on the first row), with no global
-    * window: per-cell maxes are a ≤`coarseCells`-row bounded collect (the
-    * exactNtile counts pattern), scan-left'ed on the driver into exclusive
-    * cell offsets and broadcast back; an in-cell window finishes the
-    * prefix. q198 uses this for the cross-bucket predecessor max, where
-    * the input is already the 1024×-reduced bucket relation.
+    * window: the layout's per-cell exclusive prefix max (a ≤ cells-row
+    * collect, broadcast back) plus an in-cell window finishes the prefix.
+    * q198 uses this for the cross-bucket predecessor max, where the input
+    * is already the 1024×-reduced bucket relation.
     */
   def exclusiveMaxLong(
       df: DataFrame, order: Column, ties: Seq[Column],
-      value: Column, out: String, coarseCells: Int = 64): DataFrame = {
-    // Ckpt for the same three-consumer reason as exclusiveSum: the
-    // boundary scan, the bounded cellMax collect, and the final plan
-    // would each recompute the caller's upstream lineage
-    val keyed = Ckpt(df.withColumn("__pval", value.cast("long"))
+      value: Column, out: String): DataFrame = {
+    // Ckpt for the same multi-consumer reason as exclusiveSum
+    val Value = CellLayout.Value
+    val keyed = Ckpt(df.withColumn(Value, value.cast("long"))
       .withColumn("__pv", order.cast("double")))
-    val probs = (1 until coarseCells).map(_.toDouble / coarseCells).toArray
-    val bounds =
-      if (coarseCells <= 1) Array.empty[Double]
-      else keyed.stat.approxQuantile("__pv", probs, 0.001)
-        .map(_ + 0.0) // -0.0 -> 0.0 BEFORE distinct: CellBucket.search requires distinct bounds
-        .distinct.sorted
-    val celled = keyed
-      .withColumn("__pc", Quantiles.cellOf(df.sparkSession, col("__pv"), bounds, "PrefixSum"))
-      .drop("__pv")
-    // ≤ coarseCells rows — the documented bounded driver-side collect
-    // an all-null cell yields a null max (window max skips nulls) — it
-    // must pass the prior cells' max through, not NPE on getLong
-    val cellMax = celled.groupBy(col("__pc")).agg(max(col("__pval")).as("__pm"))
-      .collect()
-      .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .sortBy(_._1)
-    val offs = cellMax.map(_._1)
-      .zip(cellMax.scanLeft(Option.empty[Long]) { case (acc, (_, m)) =>
-        (acc.toSeq ++ m.toSeq).reduceOption((a, b) => math.max(a, b))
-      })
-      .map { case (cell, m) => (cell, m.map(java.lang.Long.valueOf).orNull) }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = offs.toSeq.toDF("__pc", "__poffm")
-    val wIn = Window.partitionBy(col("__pc"))
+    val Seq(layout) = CellLayout.of(keyed, Seq(col("__pv")), "PrefixSum")
+    val celled = layout.cellOf(keyed, col("__pv")).drop("__pv")
+    val wIn = Window.partitionBy(col(CellLayout.Cell))
       .orderBy((order.asc +: ties.map(_.asc)): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    // greatest skips nulls: null only when BOTH the cell offset (first
+    // greatest skips nulls: null only when BOTH the cell prefix (first
     // cell) and the in-cell prefix (first row in cell) are absent — i.e.
     // exactly the window lag/prefix-max null contract
-    celled
-      .join(broadcast(offDf), Seq("__pc"))
-      .withColumn(out, greatest(col("__poffm"), max(col("__pval")).over(wIn)))
-      .drop("__pval", "__pc", "__poffm")
+    layout.withPrefixes(celled, Nil)
+      .withColumn(out, greatest(col("__pmaxoff"), max(col(Value)).over(wIn)))
+      .drop(Value, CellLayout.Cell, "__pnoff", "__psumoff", "__pmaxoff")
   }
 }

@@ -1,76 +1,39 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Distributed EXACT ntile.
+/** Distributed EXACT ntiles and interpolating percentiles on the
+  * [[CellLayout]] kernel.
   *
   * `ntile(n).over(Window.orderBy(...))` with an empty partitionSpec is the
   * classic 100 TB plan killer: Spark funnels the ENTIRE relation into one
-  * task for the global sort. This helper computes the identical bucket
-  * assignment with no single-task stage:
-  *
-  *   1. one `approxQuantile` pass picks ~`coarseCells` boundary values of
-  *      the (direction-normalized) sort key — approximate is fine here,
-  *      the boundaries only balance load, never decide membership;
-  *   2. every row gets a coarse cell id from those fixed boundaries (a
-  *      native binary-search expression, O(log cells)/row — monotone in
-  *      the sort key, so cells partition the total order into contiguous
-  *      runs);
-  *   3. one tiny `groupBy(cell).count()` (≤ coarseCells rows, the
-  *      documented bounded driver-side collect pattern) yields each
-  *      cell's exact global rank offset;
-  *   4. a per-CELL window (`row_number` partitioned by cell) plus the
-  *      broadcast offset gives the exact global rank, and the standard
-  *      ntile split (first `N mod n` buckets get `⌈N/n⌉` rows) maps rank
-  *      to bucket arithmetically.
-  *
-  * Result is row-identical to the single-partition ntile (QuantilesSpec
-  * asserts equality against Spark's own ntile on asc/desc/tied inputs);
-  * the plan's largest task is ~N/coarseCells rows — raise `coarseCells`
-  * with the data (it only costs boundary-array length; the default 64
-  * matches local[32], a cluster run would use O(cores) or more).
+  * task for the global sort. [[exactNtile]] computes the identical bucket
+  * assignment with no task sorting more than one cell: the layout's exact
+  * per-cell counts give each cell's global rank offset, a per-CELL
+  * `row_number` plus that offset is the exact global rank, and the
+  * standard ntile split (first `N mod n` buckets get `⌈N/n⌉` rows) maps
+  * rank to bucket arithmetically. The result is row-identical to the
+  * single-partition ntile (QuantilesSpec asserts equality against Spark's
+  * own ntile on asc/desc/tied inputs, at one cell and at several).
   *
   * Preconditions: `value` must be non-null — ENFORCED: a null sort key
-  * raises at cell assignment (engines disagree on null ordering, and a
-  * silent null would land in cell 0 yet sort nulls-last in the in-cell
-  * window, producing buckets that diverge from window ntile) — and
-  * numerically castable to double; the double cast is only used for
-  * COARSE placement (monotone, collapse-safe — equal or collapsed values
-  * land in one cell and the in-cell sort uses the original column), so
-  * DECIMAL inputs keep exact ordering.
+  * raises at cell assignment — and numerically castable to double; the
+  * double cast is only used for COARSE placement (monotone, collapse-safe
+  * — equal or collapsed values land in one cell and the in-cell sort uses
+  * the original column), so DECIMAL inputs keep exact ordering.
   */
 object Quantiles {
 
   /** One ntile sort key: bucket by `value` (asc/desc) into column `out`. */
   final case class NtileKey(value: Column, ascending: Boolean, out: String)
 
-  /** Coarse-cell id from fixed boundary values: a monotone native
-    * binary-search expression ([[graft.functions.CellBucket]]), with a
-    * fail-fast guard on null sort keys. Shared by [[exactNtiles]] and
-    * [[PrefixSum]] (same machinery, different running aggregate).
-    */
-  private[ops] def cellOf(
-      spark: org.apache.spark.sql.SparkSession,
-      qv: Column, bounds: Array[Double], what: String): Column = {
-    // native binary search (O(log cells)/row, constant codegen size) —
-    // the composed when-chain this replaces was O(cells)/row and scaled
-    // the WHOLE pipeline with the knob it exists to turn (measured on
-    // q309 at sf10: 3.0→8.9→17.2 s for cells 16→64→256; see
-    // functions.CellBucket scaladoc)
-    val cells =
-      if (bounds.isEmpty) lit(0)
-      else graft.functions.BucketExpressions.cellBucket(spark, qv, bounds)
-    when(qv.isNotNull, cells).otherwise(
-      raise_error(lit(s"$what: null sort key — filter or impute nulls before bucketing"))
-        .cast("int"))
-  }
-
   def exactNtile(
       df: DataFrame, n: Int, value: Column, ascending: Boolean,
-      ties: Seq[Column], out: String, coarseCells: Int = 64): DataFrame =
-    exactNtiles(df, n, Seq(NtileKey(value, ascending, out)), ties, coarseCells)
+      ties: Seq[Column], out: String): DataFrame =
+    exactNtiles(df, n, Seq(NtileKey(value, ascending, out)), ties)
 
   /** EXACT interpolating percentiles of one double column, bit-identical
     * to Spark's `percentile`/`median` aggregate (PercentileParitySpec pins
@@ -81,71 +44,67 @@ object Quantiles {
     * single-threaded per group, and at 100 TB the buffer itself is an OOM
     * (guide §5: per-task state). This helper keeps everything bounded:
     *
-    *   1. one approxQuantile pass picks ~`coarseCells` boundaries
-    *      (load-balance only — membership never depends on them);
-    *   2. one exact per-cell count aggregate (≤ coarseCells rows
-    *      collected — the documented bounded driver-side pattern);
-    *   3. the 1-2 boundary ROWS each percentile needs are located by
+    *   1. the layout's boundary pass (row count + boundaries, one
+    *      aggregate), then — only with several cells — its exact per-cell
+    *      counts (≤ cells rows collected);
+    *   2. the 1-2 boundary ROWS each percentile needs are located by
     *      rank arithmetic and picked via an in-cell sort of only the
-    *      cells that contain them (~N/coarseCells rows, distributed);
-    *   4. the interpolation `(ceil(pos)−pos)·lo + (pos−floor(pos))·hi`
+    *      cells that contain them (≤ RowsPerCell rows each, distributed);
+    *   3. the interpolation `(ceil(pos)−pos)·lo + (pos−floor(pos))·hi`
     *      with pos = p·(n−1), integral pos short-circuiting to `lo`, is
-    *      Spark's own IEEE shape (pinned bit-exact on Spark 4.1 across
-    *      magnitude-adversarial inputs by PercentileParitySpec — the
-    *      `lo + frac·(hi−lo)` form is 1 ULP off on real inputs).
+    *      Spark's own IEEE shape (the `lo + frac·(hi−lo)` form is 1 ULP
+    *      off on real inputs).
     *
-    * Nulls are skipped, exactly as the percentile aggregate skips them.
-    * The caller's `df` is scanned three times (boundaries, counts, pick)
-    * — pass a materialized (Ckpt) relation when the upstream plan is
-    * expensive. Returns one double per prob, for embedding as broadcast
-    * literals.
+    * Nulls are skipped, exactly as the percentile aggregate skips them; an
+    * empty or all-null input gives None per prob, where the aggregate
+    * gives NULL. NaN sorts greatest, as in the aggregate. The caller's
+    * `df` is scanned two or three times — pass a materialized (Ckpt)
+    * relation when the upstream plan is expensive. Returns one value per
+    * prob, for embedding as literals (`typedLit` keeps None a typed NULL).
     */
   def exactPercentileValues(
-      df: DataFrame, value: Column, probs: Seq[Double],
-      coarseCells: Int = 64): Seq[Double] =
-    percentileBoundsByKey(df, Nil, value, probs, coarseCells) match {
-      case Seq((_, triples)) => triples.map(sparkInterpolate)
-      case other => sys.error(s"expected one group, got ${other.size}")
+      df: DataFrame, value: Column, probs: Seq[Double]): Seq[Option[Double]] =
+    percentileBoundsByKey(df, Nil, value, probs) match {
+      case Seq((_, triples)) => triples.map(t => Some(sparkInterpolate(t)))
+      case _ => probs.map(_ => None)
     }
 
   /** The raw (pos, lo, hi) interpolation inputs of each prob — for
     * callers that replicate a DIFFERENT engine-pinned interpolation
-    * (q232's slope median mirrors DuckDB quantile_cont's
-    * `lo + frac·(hi−lo)` shape, which is 1 ULP off Spark's). Same
-    * machinery, same passes.
+    * (DuckDB quantile_cont's `lo + frac·(hi−lo)` shape, which is 1 ULP
+    * off Spark's). Same passes; an empty or all-null input has no such
+    * inputs and raises.
     */
   def exactPercentileBounds(
-      df: DataFrame, value: Column, probs: Seq[Double],
-      coarseCells: Int = 64): Seq[(Double, Double, Double)] =
-    percentileBoundsByKey(df, Nil, value, probs, coarseCells) match {
+      df: DataFrame, value: Column, probs: Seq[Double]): Seq[(Double, Double, Double)] =
+    percentileBoundsByKey(df, Nil, value, probs) match {
       case Seq((_, triples)) => triples
-      case other => sys.error(s"expected one group, got ${other.size}")
+      case _ => throw new IllegalArgumentException("exactPercentileBounds: no non-null values")
     }
 
   /** Per-KEY exact interpolating percentiles over a BOUNDED key domain
     * (q137's per-returnflag median/MAD, q94's per-flag p50/95/99): the
-    * same cell machinery with (key, cell) counts — the collected relation
-    * is |keys|·cells rows, so the key domain must be a lattice, never
+    * same layout with (key, cell) counts — the collected relation is
+    * |keys|·cells rows, so the key domain must be a lattice, never
     * data-sized. Returns a LOCAL relation (key columns with their
     * original types + one double column per prob) for broadcast
     * join-back; values are bit-identical to the per-group
-    * `percentile(...)` aggregate (PercentileParitySpec).
+    * `percentile(...)` aggregate (PercentileParitySpec), a NULL key
+    * included. Keys whose values are all null are absent, and an empty
+    * input gives an empty relation.
     */
   def exactPercentilesByKey(
       df: DataFrame, keyCols: Seq[String], value: Column,
-      probs: Seq[Double], outCols: Seq[String],
-      coarseCells: Int = 64): DataFrame = {
+      probs: Seq[Double], outCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty && outCols.size == probs.size)
     val spark = df.sparkSession
-    val rows = percentileBoundsByKey(df, keyCols, value, probs, coarseCells)
+    val rows = percentileBoundsByKey(df, keyCols, value, probs)
       .map { case (key, triples) =>
         org.apache.spark.sql.Row.fromSeq(key ++ triples.map(sparkInterpolate))
       }
     val keySchema = df.select(keyCols.map(col): _*).schema
-    val schema = org.apache.spark.sql.types.StructType(
-      keySchema.fields ++ outCols.map(o =>
-        org.apache.spark.sql.types.StructField(
-          o, org.apache.spark.sql.types.DoubleType, nullable = false)))
+    val schema = StructType(
+      keySchema.fields ++ outCols.map(o => StructField(o, DoubleType, nullable = false)))
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, schema)
   }
@@ -162,159 +121,124 @@ object Quantiles {
   }
 
   /** Shared core: per key (or globally for keyCols = Nil), the
-    * (pos, lo, hi) triple of every prob. Three bounded passes over `df`:
-    * boundary scan, (key, cell) exact counts (collected — bounded by
-    * |keys|·cells), and one pick job that sorts ONLY the cells holding
-    * boundary rows (~N/coarseCells rows each, distributed). Nulls are
-    * skipped exactly as the percentile aggregate skips them; keys whose
-    * group is empty after the null filter are absent from the result
-    * (the aggregate would emit NULL — callers join, so absence ≡ NULL
-    * dropped, which every battery caller wants).
+    * (pos, lo, hi) triple of every prob. Passes over `df`: the layout's
+    * boundary aggregate; the (key, cell) exact counts (collected —
+    * bounded by |keys|·cells), skipped for an unkeyed one-cell layout
+    * whose count the boundary pass already gave; and one pick job that
+    * sorts ONLY the cells holding boundary rows. Keys with no non-null
+    * value are absent from the result.
     */
   private def percentileBoundsByKey(
       df: DataFrame, keyCols: Seq[String], value: Column,
-      probs: Seq[Double],
-      coarseCells: Int): Seq[(Seq[Any], Seq[(Double, Double, Double)])] = {
+      probs: Seq[Double]): Seq[(Seq[Any], Seq[(Double, Double, Double)])] = {
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0))
     val spark = df.sparkSession
     val kcols = keyCols.map(col)
     val v = df.select(kcols :+ value.cast("double").as("__pv"): _*)
       .filter(col("__pv").isNotNull)
-    val qprobs = (1 until coarseCells).map(_.toDouble / coarseCells).toArray
-    val bounds =
-      if (coarseCells <= 1) Array.empty[Double]
-      else v.stat.approxQuantile("__pv", qprobs, 0.001)
-        .map(_ + 0.0).distinct.sorted
-    val celled = v.withColumn("__qc",
-      cellOf(spark, col("__pv"), bounds, "Quantiles.exactPercentiles"))
+    val Seq(layout) = CellLayout.of(v, Seq(col("__pv")), "Quantiles.exactPercentiles")
+    if (layout.rows == 0L) return Nil
+    val celled = layout.cellOf(v, col("__pv"))
+    val Cell = CellLayout.Cell
     val k = keyCols.size
-    val counts = celled.groupBy(kcols :+ col("__qc"): _*)
-      .agg(count(lit(1)).as("__qn")).collect()
-    require(counts.nonEmpty, "exactPercentiles: empty input")
-    val byKey: Seq[(Seq[Any], Seq[(Int, Long)])] = counts
-      .groupBy(r => (0 until k).map(r.get): Seq[Any])
-      .view.mapValues(_.map(r => (r.getInt(k), r.getLong(k + 1))).sortBy(_._1).toSeq)
-      .toSeq
+    // (key, cell, count, exclusive count prefix within the key)
+    val counts: Seq[(Seq[Any], Int, Long, Long)] =
+      if (k == 0 && layout.cells == 1) Seq((Nil, 0, layout.rows, 0L))
+      else layout.totals(celled, keyCols).collect().toSeq.map(r =>
+        ((0 until k).map(r.get): Seq[Any], r.getAs[Int](Cell),
+          r.getAs[Long]("__pn"), r.getAs[Long]("__pnoff")))
     // per key: 1-based global ranks each prob interpolates between, and
     // their (cell, in-cell rank) location
     case class Pick(key: Seq[Any], cell: Int, inRank: Long)
-    val plans = byKey.map { case (key, cc) =>
-      val n = cc.map(_._2).sum
-      val offs = cc.map(_._1).zip(cc.scanLeft(0L)(_ + _._2))
+    val plans = counts.groupBy(_._1).toSeq.map { case (key, cc) =>
+      val n = cc.map(_._3).sum
       val triples = probs.map { p =>
         val pos = p * (n - 1) // Spark: percentage * (count - 1), in doubles
         (pos, math.floor(pos).toLong + 1L, math.ceil(pos).toLong + 1L)
       }
       val locate = triples.flatMap(t => Seq(t._2, t._3)).distinct.map { r =>
-        val (cell, off) = offs.zip(cc)
-          .collectFirst { case ((c, o), (_, cn)) if r > o && r <= o + cn => (c, o) }
+        val (_, cell, _, off) = cc.find(c => r > c._4 && r <= c._4 + c._3)
           .getOrElse(sys.error(s"rank $r out of range 1..$n"))
         r -> Pick(key, cell, r - off)
       }.toMap
       (key, triples, locate)
     }
     // one distributed pick job across all keys: restrict to the cells
-    // that hold boundary rows, rank in-(key, cell), join the needed
-    // (key, cell, rank) rows (driver-built local relation, broadcast)
+    // that hold boundary rows, rank in-(key, cell), and join the needed
+    // (key, cell, rank) rows (driver-built local relation, broadcast) —
+    // null-safe on the keys, so a NULL key group is picked like any other
     val needs = plans.flatMap(_._3.values).distinct
+    val needKeys = keyCols.indices.map(i => s"__nk$i")
     val keySchema = df.select(kcols: _*).schema
-    val needSchema = org.apache.spark.sql.types.StructType(
-      keySchema.fields :+
-        org.apache.spark.sql.types.StructField(
-          "__qc", org.apache.spark.sql.types.IntegerType, nullable = false) :+
-        org.apache.spark.sql.types.StructField(
-          "__rn", org.apache.spark.sql.types.LongType, nullable = false))
+    val needSchema = StructType(
+      keySchema.fields.zip(needKeys).map { case (f, nk) => f.copy(name = nk) } ++ Seq(
+        StructField("__nc", IntegerType, nullable = false),
+        StructField("__nr", LongType, nullable = false)))
     import scala.jdk.CollectionConverters._
     val needDf = spark.createDataFrame(
-      needs.map(p => org.apache.spark.sql.Row.fromSeq(p.key :+ p.cell :+ p.inRank)).asJava,
-      needSchema)
-    val needCells = needs.map(_.cell).distinct
-    val w = Window.partitionBy(kcols :+ col("__qc"): _*).orderBy(col("__pv"))
+      needs.map(p => Row.fromSeq(p.key :+ p.cell :+ p.inRank)).asJava, needSchema)
+    val on = keyCols.zip(needKeys).map { case (kc, nk) => col(kc) <=> col(nk) }
+      .foldLeft(col(Cell) === col("__nc") && col("__rn") === col("__nr"))(_ && _)
+    val w = Window.partitionBy(kcols :+ col(Cell): _*).orderBy(col("__pv"))
     val picked = celled
-      .filter(col("__qc").isin(needCells.map(Integer.valueOf): _*))
+      .filter(col(Cell).isin(needs.map(_.cell).distinct.map(Integer.valueOf): _*))
       .withColumn("__rn", row_number().over(w).cast("long"))
-      .join(broadcast(needDf), keyCols :+ "__qc" :+ "__rn")
+      .join(broadcast(needDf), on)
       .collect()
       .map(r => ((0 until k).map(r.get): Seq[Any],
-        r.getAs[Int]("__qc"), r.getAs[Long]("__rn")) -> r.getAs[Double]("__pv"))
+        r.getAs[Int](Cell), r.getAs[Long]("__rn")) -> r.getAs[Double]("__pv"))
       .toMap
     plans.map { case (key, triples, locate) =>
       def valueAt(r: Long): Double = {
         val p = locate(r)
         picked((p.key, p.cell, p.inRank))
       }
-      key -> triples.map { case (pos, rLo, rHi) =>
-        if (rLo == rHi) (pos, valueAt(rLo), valueAt(rLo))
-        else (pos, valueAt(rLo), valueAt(rHi))
-      }
+      key -> triples.map { case (pos, rLo, rHi) => (pos, valueAt(rLo), valueAt(rHi)) }
     }
   }
 
   /** Several exact ntiles over the SAME relation (q172's RFM shape —
-    * recency/frequency/monetary quintiles) sharing ONE approxQuantile
-    * scan: the multi-column variant summarizes every sort key in a single
-    * pass, so k score columns cost one boundary scan instead of k.
+    * recency/frequency/monetary quintiles) sharing ONE boundary pass:
+    * the layout aggregate summarizes every sort key at once, so k score
+    * columns cost one boundary scan instead of k.
     */
   def exactNtiles(
-      df: DataFrame, n: Int, keys: Seq[NtileKey],
-      ties: Seq[Column], coarseCells: Int = 64): DataFrame = {
+      df: DataFrame, n: Int, keys: Seq[NtileKey], ties: Seq[Column]): DataFrame = {
     require(n > 0, s"ntile bucket count must be positive, got $n")
     require(keys.nonEmpty, "at least one ntile sort key required")
     val qvName = keys.indices.map(i => s"__qv$i")
-    // Ckpt BEFORE the eager passes (r16): the input lineage is consumed
-    // by the boundary scan, by EVERY key's bounded cell-count collect,
-    // and by the final plan — without a materialization point each
-    // consumer recomputes the caller's whole upstream plan (2 + k full
-    // computations for k ntile keys). One localCheckpoint (reliable
-    // checkpoint under graft.checkpoint.dir) pays the input once; the
-    // per-key counts then read the materialized base directly instead of
-    // the folded chain, so key i's collect no longer replays keys 1..i−1's
-    // window joins either.
+    // Ckpt BEFORE the eager passes: the input lineage is consumed by the
+    // boundary pass, by EVERY key's cell-count collect, and by the final
+    // plan — without a materialization point each consumer recomputes
+    // the caller's whole upstream plan. The per-key counts read the
+    // materialized base directly, so key i's collect never replays keys
+    // 1..i−1's window joins.
     val keyed = Ckpt(keys.zipWithIndex.foldLeft(df) { case (d, (k, i)) =>
-      val dir = if (k.ascending) k.value.cast("double") else negate(k.value.cast("double"))
-      d.withColumn(qvName(i), dir)
+      d.withColumn(qvName(i), CellLayout.surrogate(k.value, k.ascending))
     })
-    // pass 1: coarse boundaries for ALL sort keys in one scan
-    // (driver-side doubles; membership-neutral)
-    val probs = (1 until coarseCells).map(_.toDouble / coarseCells).toArray
-    val bounds: Seq[Array[Double]] =
-      if (coarseCells <= 1) keys.map(_ => Array.empty[Double])
-      else keyed.stat.approxQuantile(qvName.toArray, probs, 0.001)
-        // -0.0 -> 0.0 BEFORE distinct: CellBucket.search requires distinct bounds
-        .toSeq.map(_.map(_ + 0.0).distinct.sorted)
-    keys.zipWithIndex.foldLeft(keyed) { case (d, (k, i)) =>
-      oneKey(d, keyed, n, k, col(qvName(i)), bounds(i), ties)
+    val layouts = CellLayout.of(keyed, qvName.map(col), "Quantiles.exactNtile")
+    keys.zip(layouts).zipWithIndex.foldLeft(keyed) { case (d, ((k, layout), i)) =>
+      oneKey(d, keyed, n, k, col(qvName(i)), layout, ties)
     }.drop(qvName: _*)
   }
 
   private def oneKey(
       df: DataFrame, base: DataFrame, n: Int, k: NtileKey, qv: Column,
-      bounds: Array[Double], ties: Seq[Column]): DataFrame = {
-    val celled = df.withColumn("__qc", cellOf(df.sparkSession, qv, bounds, "Quantiles.exactNtile"))
-    // pass 2: exact per-cell counts → global rank offsets (≤ coarseCells
-    // rows — bounded, never data-sized). Counted off the MATERIALIZED
-    // base (cell membership depends only on qv + bounds, not on other
-    // keys' outputs), so this eager collect never replays the fold chain.
-    val counts = base
-      .withColumn("__qc", cellOf(base.sparkSession, qv, bounds, "Quantiles.exactNtile"))
-      .groupBy(col("__qc")).agg(count(lit(1)).as("__qn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val offsets = counts.map(_._1)
-      .zip(counts.scanLeft(0L)(_ + _._2))
-      .map { case (cell, off) => (cell, off) }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("__qc", "__qoff")
-    // pass 3: in-cell exact rank (original column order — the double cast
-    // never decides a comparison) + offset = exact global rank
+      layout: CellLayout, ties: Seq[Column]): DataFrame = {
+    val Cell = CellLayout.Cell
+    // exact per-cell rank offsets, counted off the MATERIALIZED base (cell
+    // membership depends only on qv + bounds, not on other keys' outputs)
+    val offset = layout.withPrefixes(
+      layout.cellOf(df, qv), Nil, from = Some(layout.cellOf(base, qv)))
+    // in-cell exact rank (original column order — the double cast never
+    // decides a comparison) + offset = exact global rank
     val inCell = (if (k.ascending) k.value.asc else k.value.desc) +: ties.map(_.asc)
-    val w = Window.partitionBy(col("__qc")).orderBy(inCell: _*)
-    val ranked = celled
-      .join(broadcast(offDf), Seq("__qc"))
-      .withColumn("__qr", row_number().over(w).cast("long") + col("__qoff"))
+    val w = Window.partitionBy(col(Cell)).orderBy(inCell: _*)
+    val ranked = offset
+      .withColumn("__qr", row_number().over(w).cast("long") + col("__pnoff"))
     // standard ntile split: q = N div n, r = N mod n; buckets 1..r hold
     // q+1 rows, buckets r+1..n hold q
+    val total = layout.rows
     val q = total / n
     val r = total % n
     // integral `div`, not `/`-then-floor: double division of two exact
@@ -329,6 +253,6 @@ object Quantiles {
       }
     ranked
       .withColumn(k.out, bucket.cast("bigint"))
-      .drop("__qc", "__qoff", "__qr")
+      .drop(Cell, "__pnoff", "__qr")
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * heavy part (the 4-way fact-table rollup that PRODUCES the edge
   * relation) stays distributed; only the fixed-size iteration state
   * crosses to the driver — the same documented bounded-collect class as
-  * exactNtile's ≤coarseCells cell counts.
+  * the cell layout's ≤ MaxCells per-cell counts (CellLayout).
   *
   * DATA-sized graphs (documents, users) keep the distributed loop:
   * Dedup.connectedComponents and the q160-family shape remain the

@@ -202,16 +202,17 @@ object Core {
           col("l_orderkey"), col("l_linenumber"),
           Cleaning.gateToNull(col("l_extendedprice"), Cleaning.Bounds.closed(1000, 50000))
             .as("price_gated"))
-        // r17: exact median via Quantiles.exactPercentileValues (coarse
-        // cells + in-cell positional pick, bit-identical to median() —
+        // r17: exact median via Quantiles.exactPercentileValues (cell
+        // layout + in-cell positional pick, bit-identical to median() —
         // PercentileParitySpec) instead of the exact-percentile buffer,
         // whose per-partition value map is data-sized state (guide §5);
-        // the scalar embeds as a literal, so the broadcast join goes too
+        // the scalar embeds as a literal (a typed NULL when the gate
+        // leaves no value, as median() gives), so the broadcast join goes too
         val medV = graft.ops.Quantiles
           .exactPercentileValues(g, col("price_gated"), Seq(0.5)).head
         g.select(
             col("l_orderkey"), col("l_linenumber"),
-            R(coalesce(col("price_gated"), lit(medV)), 4).as("price_imputed"))
+            R(coalesce(col("price_gated"), typedLit(medV)), 4).as("price_imputed"))
           .orderBy("l_orderkey", "l_linenumber", "price_imputed")
       },
       Some(s"""WITH g AS (

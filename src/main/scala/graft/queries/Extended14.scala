@@ -149,7 +149,7 @@ object Extended14 {
     // as Quantiles.exactNtiles (coarse cells + exact offsets + per-cell
     // windows — no single-task global sort; identical assignment, pinned
     // in QuantilesSpec); the agg is Ckpt'd once and the multi-key variant
-    // shares ONE multi-column approxQuantile scan across all three sort
+    // shares ONE boundary aggregate across all three sort
     // keys, so the boundary pass costs one scan instead of three.
     QueryDef(
       "q172_rfm",

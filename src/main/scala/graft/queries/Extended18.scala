@@ -266,7 +266,7 @@ object Extended18 {
             ntok.as("n_tokens"))
         val bySrc = Window.partitionBy(col("source"))
         // Ckpt between the chained ranks: each PrefixSum.rank runs an
-        // eager approxQuantile + subtotal agg + join over its input, so
+        // eager boundary agg + subtotal agg + join over its input, so
         // without a barrier the second rank re-executes the first's whole
         // pipeline (incl. per-row tokensNorm sizing) ~4x — the q172 rule
         val r1d = graft.ops.Ckpt(PrefixSum.rank(base, Seq("source"),

@@ -76,18 +76,19 @@ object Extended43 {
         // fixed χ² cut is vacuous — flag RELATIVE to the corpus, q255's
         // pattern: d² beyond twice the exact interpolating median.
         // r17: the median comes from Quantiles.exactPercentileValues
-        // (coarse cells + in-cell positional pick — bit-identical to the
+        // (cell layout + in-cell positional pick — bit-identical to the
         // percentile aggregate, PercentileParitySpec) instead of the
         // exact-percentile buffer, whose per-partition value map was the
-        // single slowest node here and is an OOM at scale (guide §5)
-        val medV = graft.ops.Quantiles
-          .exactPercentileValues(scored, col("d2"), Seq(0.5)).head
+        // single slowest node here and is an OOM at scale (guide §5);
+        // no value gives a typed NULL literal, as the aggregate gives NULL
+        val medV = typedLit(graft.ops.Quantiles
+          .exactPercentileValues(scored, col("d2"), Seq(0.5)).head)
         val flagged = scored
-          .agg(count(when(col("d2") > lit(2.0) * lit(medV), 1)).as("n_flagged"))
+          .agg(count(when(col("d2") > lit(2.0) * medV, 1)).as("n_flagged"))
         scored.crossJoin(broadcast(flagged))
           .select(col("l_orderkey"), col("l_linenumber"), col("qty"),
             col("cents"), R(col("d2"), 6).as("d2_r"),
-            R(lit(medV), 6).as("med_r"), col("n_flagged"))
+            R(medV, 6).as("med_r"), col("n_flagged"))
           .orderBy(col("d2_r").desc, col("l_orderkey"), col("l_linenumber"),
             col("qty"), col("cents"))
           .limit(30)

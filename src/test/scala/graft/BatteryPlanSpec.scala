@@ -143,17 +143,17 @@ class BatteryPlanSpec extends SparkSuite {
 
   /** query → why its lattice-key window (non-empty partitionSpec whose
     * per-key row count GROWS with the data) survives 100 TB. The only
-    * admitted class is the coarse-cell helper machinery itself: its
+    * admitted class is the cell-layout helper machinery itself: its
     * in-(key, cell) windows deliberately bound the largest task at
-    * ~N/(keys·cells) where `cells` is a LOAD PARAMETER raised with the
-    * cluster (64 ≈ local[32]; a 1000-executor run would use O(10k)) —
-    * documented in Quantiles/PrefixSum scaladoc, row-identity pinned in
+    * ~N/(keys·cells), where the layout derives `cells` from the row count
+    * (at least 64, one per 2^20 rows past that, at most 4096) —
+    * documented in CellLayout scaladoc, row-identity pinned in
     * QuantilesSpec/PrefixSumSpec. Raw low-cardinality partitions (the
     * q142/q113/q58 class this sweep exists to catch) must restructure
     * instead.
     */
   private val latticeWindowBounded: Map[String, String] = Map(
-    "q58_window_nav" -> "PrefixSum.rank in-cell windows over raw orders — cells are the load parameter (N/(5·cells) per task; raise with the cluster)",
+    "q58_window_nav" -> "PrefixSum.rank in-cell windows over raw orders — cells are the load parameter (N/(5·cells) per task; cells grow with N)",
     "q134_equidepth_hist" -> "exactNtile in-cell windows over raw lineitem — cells are the load parameter (N/cells per task)",
     "q140_sorted_neighborhood" -> "PrefixSum.rank in-cell windows over docs blocked by 8-char prefix — cells (packed post-prefix bytes) split hot blocks; cells are the load parameter",
     "q171_weighted_median" -> "PrefixSum.exclusiveSum in-cell windows over raw lineitem — cells are the load parameter (N/(3·cells) per task)",
@@ -321,24 +321,24 @@ class BatteryPlanSpec extends SparkSuite {
 
   /** query → why its PrefixSum in-cell window may grow linearly across
     * the SECOND document decade (sf0.1 → sf1) while staying sound at
-    * 100 TB. The in-cell window's task bound is N/(|keys|·coarseCells) BY
-    * DESIGN (PrefixSum scaladoc): coarseCells is the parallelism knob —
-    * pinned at 64 to match local[32] here, raised with the cluster (4096+
-    * at 1000 executors) in production — so growth at a FIXED knob is the
-    * documented contract, not a plan defect; the base sweep can't see it
-    * because N/(keys·cells) ≪ 1 row at sf0.001. Queries whose order keys
-    * are heavy-tie integers also pass tieCell so the bound really is
-    * N/(keys·cells) and not hot-value multiplicity.
+    * 100 TB. The in-cell window's task bound is N/(|keys|·cells) BY
+    * DESIGN (CellLayout scaladoc): the layout keeps 64 cells up to
+    * 64·2^20 rows and adds one cell per 2^20 rows past that (at most
+    * 4096), so growth at these sizes — all below 64·2^20 rows, 64 cells —
+    * is the documented contract, not a plan defect; the base sweep can't
+    * see it because N/(keys·cells) ≪ 1 row at sf0.001. Queries whose
+    * order keys are heavy-tie integers also pass tieCell so the bound
+    * really is N/(keys·cells) and not hot-value multiplicity.
     */
   private val latticeDocDecadeBounded: Map[String, String] = Map(
     // r16: q145/q203/q314 dropped — with the PrefixSum/exactNtiles input
     // materialization their in-cell windows no longer register as
     // candidates on this axis (stale-entry rule: a whitelist entry can't
     // outlive its flag)
-    "q113_mix_materialize" -> "PrefixSum in-cell window over (source, cell): N/(sources·64) per task, coarseCells is the cluster knob",
-    "q142_topp_nucleus" -> "PrefixSum in-cell window over (source, cell): N/(sources·64) per task, coarseCells is the cluster knob",
-    "q190_quantile_normalize" -> "PrefixSum in-cell window over (source, cell), tieCell-split integer order: N/(sources·64) per task",
-    "q309_stratified_sample" -> "PrefixSum in-cell window over (source, cell): N/(sources·64) per task, coarseCells is the cluster knob")
+    "q113_mix_materialize" -> "PrefixSum in-cell window over (source, cell): N/(sources·cells) per task, cells derived from N (64 below 64·2^20 rows)",
+    "q142_topp_nucleus" -> "PrefixSum in-cell window over (source, cell): N/(sources·cells) per task, cells derived from N (64 below 64·2^20 rows)",
+    "q190_quantile_normalize" -> "PrefixSum in-cell window over (source, cell), tieCell-split integer order: N/(sources·cells) per task",
+    "q309_stratified_sample" -> "PrefixSum in-cell window over (source, cell): N/(sources·cells) per task, cells derived from N (64 below 64·2^20 rows)")
 
   /** Shared measurement loop for both lattice sweeps: max-rows-per-key
     * growth of every candidate window across (smallDir, bigDir). An empty

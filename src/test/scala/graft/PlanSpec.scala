@@ -474,7 +474,7 @@ class PlanSpec extends SparkSuite {
     // three Quantiles.exactNtile passes: each contributes one CELL-
     // partitioned window (never partition-less over the data-sized
     // customer relation — BatteryPlanSpec enforces this globally) and a
-    // broadcast join of the ≤coarseCells offset relation
+    // broadcast join of the ≤cells-row offset relation
     val p = plan(q("q172_rfm"))
     assert(p.linesIterator.count(_.matches("\\(\\d+\\) Window")) == 3, p)
     assert(!p.contains("SortMergeJoin"), p)

@@ -32,9 +32,10 @@ class PrefixSumSpec extends SparkSuite {
       val rnd = new scala.util.Random(seed ^ 0x9e3779b9L)
       val asc = rnd.nextBoolean()
       val cells = 1 + rnd.nextInt(30)
-      val df = fixture(seed, nKeys = 1 + rnd.nextInt(6), rows = 800 + rnd.nextInt(1200))
-      val got = PrefixSum.exclusiveSum(df, Seq("key"), col("ord"), asc,
-        Seq(col("id")), col("v"), "cum", Some("rn"), cells)
+      val rows = 800 + rnd.nextInt(1200)
+      val df = fixture(seed, nKeys = 1 + rnd.nextInt(6), rows = rows)
+      val got = withCells(cells)(PrefixSum.exclusiveSum(df, Seq("key"), col("ord"), asc,
+        Seq(col("id")), col("v"), "cum", Some("rn")))
       val w = Window.partitionBy(col("key"))
         .orderBy((if (asc) col("ord").asc else col("ord").desc), col("id").asc)
       val want = df
@@ -58,7 +59,8 @@ class PrefixSumSpec extends SparkSuite {
         (i.toLong * 3 + rnd.nextInt(2), rnd.nextInt(100000).toLong)
       }.distinct
       val df = rows.toDF("b", "mx").repartition(5)
-      val got = PrefixSum.exclusiveMaxLong(df, col("b"), Nil, col("mx"), "pmx", cells)
+      val got = withCells(cells)(
+        PrefixSum.exclusiveMaxLong(df, col("b"), Nil, col("mx"), "pmx"))
       val want = df.withColumn("pmx_w",
         max(col("mx")).over(
           Window.orderBy(col("b").asc).rowsBetween(Window.unboundedPreceding, -1)))
@@ -83,11 +85,11 @@ class PrefixSumSpec extends SparkSuite {
     val offsetPack = PrefixSum.packAscii(col("key"), 15, 6)
     // 1. cellLoad SEES the hazard: the collapsing layout puts all N rows
     //    in one cell; the offset pack (past the boilerplate) splits them
-    val loadBad = PrefixSum.cellLoad(docs.withColumn("blk", substring(col("key"), 1, 8)),
-      Seq("blk"), collapsing)
+    val loadBad = withCells(64)(PrefixSum.cellLoad(
+      docs.withColumn("blk", substring(col("key"), 1, 8)), Seq("blk"), collapsing))
       .agg(max(col("n_rows"))).head().getLong(0)
-    val loadGood = PrefixSum.cellLoad(docs.withColumn("blk", substring(col("key"), 1, 8)),
-      Seq("blk"), offsetPack)
+    val loadGood = withCells(64)(PrefixSum.cellLoad(
+      docs.withColumn("blk", substring(col("key"), 1, 8)), Seq("blk"), offsetPack))
       .agg(max(col("n_rows"))).head().getLong(0)
     assert(loadBad == n.toLong, s"expected total collapse, got max cell $loadBad")
     assert(loadGood <= n / 8,
@@ -96,8 +98,8 @@ class PrefixSumSpec extends SparkSuite {
     //    row-identical to Spark's own window row_number (the documented
     //    contract — never worse than the window it replaces)
     val blocked = docs.withColumn("blk", substring(col("key"), 1, 8))
-    val got = PrefixSum.rank(blocked, Seq("blk"), col("key"), ascending = true,
-      Seq(col("doc_id")), "pos", cellKey = Some(collapsing), broadcastOffsets = false)
+    val got = withCells(64)(PrefixSum.rank(blocked, Seq("blk"), col("key"), ascending = true,
+      Seq(col("doc_id")), "pos", cellKey = Some(collapsing), broadcastOffsets = false))
     val w = Window.partitionBy(col("blk")).orderBy(col("key").asc, col("doc_id").asc)
     val want = blocked.withColumn("pos_w", row_number().over(w).cast("long"))
     val bad = got.join(want.select(col("doc_id"), col("pos_w")), "doc_id")
@@ -123,8 +125,8 @@ class PrefixSumSpec extends SparkSuite {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
     val df = fixture(5L, nKeys = 3, rows = 2000)
-    val got = PrefixSum.exclusiveSum(df, Seq("key"), col("ord"), true,
-      Seq(col("id")), col("v"), "cum", Some("rn"), 16)
+    val got = withCells(16)(PrefixSum.exclusiveSum(df, Seq("key"), col("ord"), true,
+      Seq(col("id")), col("v"), "cum", Some("rn")))
     got.collect()
     val wins = planNodes(got.queryExecution.executedPlan)
       .collect { case w: WindowExec => w }

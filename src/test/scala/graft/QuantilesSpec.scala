@@ -32,9 +32,9 @@ class QuantilesSpec extends SparkSuite {
   }
 
   private def check(n: Int, asc: Boolean, cells: Int): Unit = {
-    val got = Quantiles.exactNtile(
+    val got = withCells(cells)(Quantiles.exactNtile(
       li, n, col("l_quantity"), asc,
-      Seq(col("l_orderkey"), col("l_linenumber")), "bucket", cells)
+      Seq(col("l_orderkey"), col("l_linenumber")), "bucket"))
     val want = refNtile(li, n, asc)
     val key = Seq("l_orderkey", "l_linenumber").map(col)
     assert(got.join(want.select((key :+ col("bucket").as("want")): _*),
@@ -65,9 +65,9 @@ class QuantilesSpec extends SparkSuite {
 
   test("N < n assigns one row per bucket (SQL ntile rule)") {
     val tiny = li.limit(3)
-    val got = Quantiles.exactNtile(
+    val got = withCells(4)(Quantiles.exactNtile(
       tiny, 10, col("l_quantity"), true,
-      Seq(col("l_orderkey"), col("l_linenumber")), "bucket", 4)
+      Seq(col("l_orderkey"), col("l_linenumber")), "bucket"))
     assert(got.select("bucket").as[Long](spark.implicits.newLongEncoder)
       .collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
@@ -95,7 +95,8 @@ class QuantilesSpec extends SparkSuite {
       }
       val df = rows.toDF("id", "v").repartition(7)
       val asc = rnd.nextBoolean()
-      val got = Quantiles.exactNtile(df, n, col("v"), asc, Seq(col("id")), "bucket", cells)
+      val got = withCells(cells)(
+        Quantiles.exactNtile(df, n, col("v"), asc, Seq(col("id")), "bucket"))
       val ord = (if (asc) col("v").asc else col("v").desc) +: Seq(col("id").asc)
       val want = df.withColumn("want",
         ntile(n).over(Window.orderBy(ord: _*)).cast("bigint"))
@@ -105,13 +106,31 @@ class QuantilesSpec extends SparkSuite {
     }
   }
 
+  test("exactNtile ≡ window ntile with NaN sort keys (NaN sorts greatest), one cell and several") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 700).map { i =>
+      (i.toLong, if (i % 9 == 0) Double.NaN else (rnd.nextInt(400) - 200).toDouble)
+    }
+    val df = rows.toDF("id", "v").repartition(5)
+    for (asc <- Seq(true, false); cells <- Seq(1, 12)) {
+      val got = withCells(cells)(
+        Quantiles.exactNtile(df, 6, col("v"), asc, Seq(col("id")), "bucket"))
+      val ord = (if (asc) col("v").asc else col("v").desc) +: Seq(col("id").asc)
+      val want = df.withColumn("want", ntile(6).over(Window.orderBy(ord: _*)).cast("bigint"))
+      val bad = got.join(want.select(col("id"), col("want")), "id")
+        .filter(col("bucket") =!= col("want")).count()
+      assert(bad == 0L, s"asc=$asc cells=$cells: $bad rows diverged")
+    }
+  }
+
   test("plan has NO single-partition window (the hazard it exists to remove)") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    val df = Quantiles.exactNtile(
+    val df = withCells(16)(Quantiles.exactNtile(
       li, 8, col("l_quantity"), true,
-      Seq(col("l_orderkey"), col("l_linenumber")), "bucket", 16)
+      Seq(col("l_orderkey"), col("l_linenumber")), "bucket"))
     df.collect()
     val globals = planNodes(df.queryExecution.executedPlan)
       .collect { case w: WindowExec if w.partitionSpec.isEmpty => w }

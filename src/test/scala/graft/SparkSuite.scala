@@ -27,6 +27,12 @@ trait SparkSuite extends AnyFunSuite {
 
   def sf01 = "/root/testdata/sf0.1"
 
+  /** Runs `body` with the cell layout's cell count forced to `cells`
+    * (derived from the row count otherwise).
+    */
+  def withCells[T](cells: Int)(body: => T): T =
+    graft.ops.CellLayout.cellsForSpecs.withValue(Some(cells))(body)
+
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
 
