@@ -1,47 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Single-query bench harness: `runMain graft.BenchOne <query> [sfDir]
   * [reps]` — same session config as Bench, prints per-rep seconds so
-  * plan changes can be measured without a full 89-query sweep.
+  * plan changes can be measured without a full battery run, and each
+  * Spark job's wall time to stderr. With `SPARK_GRAFT_EXPLAIN` set it
+  * prints the query's optimized and formatted physical plans instead of
+  * running it.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = BenchSession.build()
-    // opt-in micro-batch profile for the streaming queries: per-batch
-    // wall/addBatch/stateOp durations to stderr (builder-side diagnosis
-    // only; nothing in the timed path changes)
-    // opt-in per-JOB profile: job wall durations localize which eager
-    // action (Ckpt materialization, boundary scan, bounded collect, final
-    // noop) owns a multi-job query's seconds (builder-side diagnosis)
-    if (sys.env.contains("SPARK_GRAFT_JOB_PROFILE"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(e.jobId, System.nanoTime())
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(e.jobId)
-          if (t0 != null)
-            System.err.println(f"[job] id=${e.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        }
-      })
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          def onQueryProgress(e: QueryProgressEvent): Unit = {
-            val p = e.progress
-            System.err.println(s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
-              s"durations=${p.durationMs} stateOps=${p.stateOperators.map(s =>
-                s"(commit=${s.allUpdatesTimeMs}+${s.commitTimeMs}ms rows=${s.numRowsTotal})").mkString}")
-          }
-        })
+    val spark = LocalSession.build()
+    // per-job wall times to stderr: they show which eager action (Ckpt
+    // materialization, boundary scan, bounded collect, final noop) owns a
+    // multi-job query's seconds
+    spark.sparkContext.addSparkListener(new SparkListener {
+      private val starts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, System.nanoTime())
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        val t0 = starts.remove(e.jobId)
+        if (t0 != null)
+          System.err.println(f"[job] id=${e.jobId}%3d ${(System.nanoTime() - t0.longValue) / 1e9}%6.2f s")
+      }
+    })
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = SparkEntry.queries(name)
     val host0 = Host.sample()

@@ -8,16 +8,16 @@ import org.apache.spark.sql.functions._
   * data, which clusters poorly — the round-13 recall curve bottomed at
   * 0.31 @ nProbe=3 on it (BENCH_SF1), so the one number a user asks of an
   * ANN index ("what recall at nProbe ≪ cells?") was fixture noise, not an
-  * index property. This fixture has real cluster structure: BenchRecall
-  * runs on it measure the index, and RecallSpec pins a threshold.
+  * index property. This fixture has real cluster structure: recall
+  * measured on it measures the index, and RecallSpec pins a threshold.
   *
   * GENERATOR v2 (round 15). v1 drew center components as
   * `sin(cl·a + i·b)` — a LINEAR phase in (cl, i), which put every center
   * on a one-parameter circle inside a single 2-plane of R^64: centers
   * whose phases nearly coincided (every ~21 cluster ids at the old salt)
   * were near-identical vectors, so "√N planted clusters" was effectively
-  * ~19 distinct directions at 20k vectors (caught round 15 when
-  * BenchDrift's build reported n_cells = 19 of 141 — Lloyd collapsed the
+  * ~19 distinct directions at 20k vectors (caught round 15 when a
+  * 20k-vector build reported n_cells = 19 of 141 — Lloyd collapsed the
   * redundant seeds). v2 draws every component from murmur3
   * (`hash(cl, i, salt) / 2^31` ∈ (−1, 1)) — genuinely independent per
   * (cluster, dim, salt), bit-reproducible, fully distributed, and free of
@@ -48,8 +48,8 @@ import org.apache.spark.sql.functions._
   * space, making it a delta a frozen-quantizer index can refresh with:
   * the regime where the training distribution no longer describes the
   * data, which is exactly what q330's imbalance_r monitor and the
-  * rebuild policy exist for (BenchDrift measures the degradation and the
-  * rebuild recovery; RecallSpec pins it).
+  * rebuild policy exist for (RecallSpec pins the degradation and the
+  * rebuild recovery).
   *
   * Usage: runMain graft.GenClustered <dstDir> <nVec> [kClusters] [dim] [noise] [centerSalt] [idOffset]
   */
@@ -79,10 +79,9 @@ object GenClustered {
   /** Refuse a clustered fixture an OLDER generator wrote (ADVICE r15: the
     * stamp existed but nothing ever checked it, so a pre-v2 dir — the
     * collapsed 2-plane geometry every round-15 recall number had to be
-    * re-certified away from — would be consumed silently). Consumers that
-    * read a pre-generated dir (BenchRecall, BENCH_SF1 sweep sessions)
-    * call this before reading; a dir with NO stamp is not a GenClustered
-    * fixture (the driver's random fixture) and passes.
+    * re-certified away from — would be consumed silently). Call this
+    * before measuring on a pre-generated dir; a dir with NO stamp is not
+    * a GenClustered fixture (the random sf fixtures) and passes.
     */
   def requireCurrentVersion(dir: String): Unit = {
     val p = java.nio.file.Paths.get(s"$dir/CLUSTERED_VERSION")
@@ -103,7 +102,7 @@ object GenClustered {
     val noise = if (args.length > 4) args(4).toDouble else 0.05
     val salt = if (args.length > 5) args(5).toLong else 1L
     val offset = if (args.length > 6) args(6).toLong else 0L
-    val spark = BenchSession.build()
+    val spark = LocalSession.build()
     run(spark, dst, nVec, k, dim, noise, salt, offset)
     spark.stop()
   }

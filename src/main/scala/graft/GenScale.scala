@@ -80,7 +80,7 @@ object GenScale {
     val src = args(0)
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = BenchSession.build()
+    val spark = LocalSession.build()
     run(spark, src, dst, k)
     spark.stop()
   }

@@ -1,7 +1,7 @@
 package graft
 
-/** Host-health sampling for the measurement mains (Bench, BenchSet,
-  * BenchRecall, BenchDrift, BenchOne): one `/proc/stat` aggregate-cpu
+/** Host-health sampling for the measurement mains (Bench, BenchOne)
+  * and perfbench's runs: one `/proc/stat` aggregate-cpu
   * sample before and after a run turns "was the box quiet?" into a field
   * IN the artifact instead of a forensic re-run. The round-14/15 bench
   * adjudications each burned a judge session proving an outlier was

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, DecimalType}
@@ -435,7 +435,7 @@ object IvfIndex {
     val nQ = queries.select(col(idCol)).limit(qBound + 1).count()
     require(nQ <= qBound,
       s"persisted-index serve: >$qBound query vectors x nProbe=$nProbe exceeds " +
-        s"maxProbePairs=$maxProbePairs — use serveTopKChunked or raise the bound")
+        s"maxProbePairs=$maxProbePairs — split the batch or raise the bound")
     val slim = Similarity.probeNearestCells(
       normalizedRel(queries, idCol, embCol, "qid", "qe"),
       spark.read.parquet(s"$indexDir/centroids"), nProbe, carryQuery = false)
@@ -485,44 +485,6 @@ object IvfIndex {
       .join(normalizedRel(queries, idCol, embCol, "qid", "qe"), "qid")
     val inv = prunedInvfile(spark, indexDir, cells)
     Similarity.topKByCosine(probes.join(inv, "cent_id"), k)
-  }
-
-  /** Production chunk loop around [[serveTopK]]: splits a query batch
-    * whose nQueries × nProbe exceeds `maxProbePairs` into deterministic
-    * hash-pmod chunks, serves each within the bound, and unions the
-    * results. Per-query top-k is chunk-independent (the window partitions
-    * by qid), so the union equals the unchunked relation exactly
-    * (Extended68Spec pins it across the boundary). Hash chunking can't
-    * bound its own imbalance a priori, so the chunk count is VERIFIED:
-    * one rollup measures the actual max chunk load and the count doubles
-    * until every chunk fits (one attempt in practice — the initial count
-    * targets half-full chunks). Costs one count + one histogram job per
-    * attempt plus one bounded probe job per chunk.
-    */
-  def serveTopKChunked(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, embCol: String, k: Int, nProbe: Int,
-      maxProbePairs: Int = 1000000): DataFrame = {
-    val qBound = math.max(1L, maxProbePairs.toLong / math.max(1, nProbe))
-    val nQ = queries.count()
-    if (nQ <= qBound)
-      return serveTopK(spark, indexDir, queries, idCol, embCol, k, nProbe, maxProbePairs)
-    def chunkOf = pmod(hash(col(idCol)), _: Column)
-    def maxLoad(nc: Int): Long = queries
-      .groupBy(chunkOf(lit(nc)).as("__chunk")).agg(count(lit(1)).as("m"))
-      .agg(max(col("m"))).head().getLong(0)
-    var nChunks = math.max(2L, (2L * nQ + qBound - 1) / qBound).toInt
-    var tries = 0
-    while (maxLoad(nChunks) > qBound) {
-      tries += 1
-      require(tries <= 16, // 2^16 chunks past target = ids colliding in hash itself
-        s"could not balance $nQ queries into chunks of <= $qBound (hash collisions?)")
-      nChunks *= 2
-    }
-    (0 until nChunks).map { i =>
-      serveTopK(spark, indexDir, queries.filter(chunkOf(lit(nChunks)) === i),
-        idCol, embCol, k, nProbe, maxProbePairs)
-    }.reduce(_ union _)
   }
 
   /** IVF+PQ ADC serve against a persisted index (the billion-vector
@@ -867,9 +829,8 @@ object IvfIndex {
   }
 
   /** REBUILD — the monitor's other trigger promoted to a first-class
-    * lifecycle operator (round-15 verdict item 5: BenchDrift demonstrated
-    * the drift → rebuild cycle inline but the library had no callable
-    * target). Retrains the coarse quantizer on the CURRENT accumulated
+    * lifecycle operator, so the drift → rebuild cycle has a callable
+    * target. Retrains the coarse quantizer on the CURRENT accumulated
     * corpus, reassigns and re-encodes every vector, rebuilds the pairs
     * artifact if one exists (at its baked threshold), and swaps all
     * components in atomically under the recovery marker — the old index
@@ -881,7 +842,7 @@ object IvfIndex {
     * BIT-IDENTICAL to a fresh [[build]] over the accumulated corpus with
     * the same derived parameters — the identity q335 hash-gates (serve
     * after build(90%)+refresh(10%)+rebuild ≡ q324's fresh-build oracle on
-    * the full corpus) and BenchDrift measures the recall value of. No
+    * the full corpus) and RecallSpec pins the recall value of. No
     * separate corpus copy is scanned: at 100 TB the index IS the
     * authoritative vector store, and rebuild costs exactly one build
     * (O(N·√N) assignment + O(N) encode) plus the pairs term when present.
@@ -1019,8 +980,8 @@ object IvfIndex {
       * COMPRESSION was demonstrated but PQ RANKING was not. 256 codewords
       * × nSub=8 × subDim=8 is the standard FAISS geometry (8-bit codes);
       * finer subspaces + a 4× codeword domain give raw ADC real
-      * within-cluster rank resolution — BenchRecall sweeps the axis and
-      * RecallSpec pins hi-res pre-rerank ≥ the production config's.
+      * within-cluster rank resolution — RecallSpec pins hi-res pre-rerank
+      * ≥ the production config's, and BENCH_SF1.md records the sweep.
       */
     val nSubHi = 8
     val subDimHi = 8

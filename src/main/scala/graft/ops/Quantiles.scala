@@ -69,19 +69,6 @@ object Quantiles {
       case _ => probs.map(_ => None)
     }
 
-  /** The raw (pos, lo, hi) interpolation inputs of each prob — for
-    * callers that replicate a DIFFERENT engine-pinned interpolation
-    * (DuckDB quantile_cont's `lo + frac·(hi−lo)` shape, which is 1 ULP
-    * off Spark's). Same passes; an empty or all-null input has no such
-    * inputs and raises.
-    */
-  def exactPercentileBounds(
-      df: DataFrame, value: Column, probs: Seq[Double]): Seq[(Double, Double, Double)] =
-    percentileBoundsByKey(df, Nil, value, probs) match {
-      case Seq((_, triples)) => triples
-      case _ => throw new IllegalArgumentException("exactPercentileBounds: no non-null values")
-    }
-
   /** Per-KEY exact interpolating percentiles over a BOUNDED key domain
     * (q137's per-returnflag median/MAD, q94's per-flag p50/95/99): the
     * same layout with (key, cell) counts — the collected relation is

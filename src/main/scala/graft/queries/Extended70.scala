@@ -17,8 +17,8 @@ import QueryDef.tbl
   * quantizer) and serves ADC top-k from it, with the oracle unrolling the
   * subspace training in SQL. RecallSpec pins the QUALITY claims the hash
   * gate can't see (reconstruction error ≤ the strided codebook's; ADC
-  * recall on clustered data); BenchRecall records the full pre-/post-
-  * rerank ADC recall curve in BENCH_SF1.md.
+  * recall on clustered data); BENCH_SF1.md records the full pre-/post-
+  * rerank ADC recall curve.
   */
 object Extended70 {
 

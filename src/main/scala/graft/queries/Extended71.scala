@@ -16,7 +16,7 @@ import QueryDef.tbl
   * BENCH_SF1 r15). The standard FAISS geometry (256 codewords × nSub=8 ×
   * subDim=8, i.e. 8-bit codes) is the lever that buys within-cluster
   * rank resolution; q334 hash-gates the whole hi-res path (build, encode,
-  * LUT, ADC, rerank) and BenchRecall sweeps the axis.
+  * LUT, ADC, rerank) and RecallSpec pins the axis on clustered data.
   *
   * q335/q336: the monitor's rebuild trigger (q330's imbalance_r) finally
   * has a callable target — [[graft.ext.IvfIndex.rebuild]] retrains on the

@@ -147,25 +147,17 @@ class Extended68Spec extends SparkSuite {
     } finally graft.queries.QueryDef.rmTree(dir)
   }
 
-  test("serveTopKChunked across the pair bound ≡ unchunked serve; serveTopK itself refuses the oversized batch BEFORE probing") {
+  test("serveTopK refuses an oversized batch before probing") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val q = emb.filter(col("vec_id") < 10) // 10 queries x nProbe 3 = 30 pairs
     val ix = graft.ext.IvfIndex.Cache.indexFor(spark, sf0001)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rn", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val whole = rows(graft.ext.IvfIndex
-      .serveTopK(spark, ix, q, "vec_id", "embedding", k = 5, nProbe = 3))
-    // maxProbePairs=8 forces ~5 chunks of ≤2 queries (8·4/5 / 3 probes)
-    val chunked = rows(graft.ext.IvfIndex
-      .serveTopKChunked(spark, ix, q, "vec_id", "embedding", k = 5, nProbe = 3,
-        maxProbePairs = 8))
-    assert(chunked == whole, "chunked serve diverged from the unchunked relation")
     val err = intercept[IllegalArgumentException] {
       graft.ext.IvfIndex.serveTopK(spark, ix, q, "vec_id", "embedding",
         k = 5, nProbe = 3, maxProbePairs = 8)
     }
-    assert(err.getMessage.contains("serveTopKChunked"),
-      s"oversized-batch error should point at the chunked wrapper: ${err.getMessage}")
+    // the pre-probe guard (query count vs maxProbePairs / nProbe = 2), not
+    // the post-collect invariant
+    assert(err.getMessage.contains(">2 query vectors x nProbe=3 exceeds maxProbePairs=8"),
+      s"oversized batch should fail the pre-probe guard: ${err.getMessage}")
   }
 }

@@ -9,8 +9,8 @@ import graft.ext.{IvfIndex, Similarity}
   * nothing about the index. On a clustered fixture (the regime embedding
   * models actually produce, and the one an IVF recall claim is about) the
   * trained quantizer must recover the structure: this pins the threshold
-  * a user can rely on. BenchRecall on a larger clustered fixture records
-  * the full curve in BENCH_SF1.md.
+  * a user can rely on. BENCH_SF1.md records the full curve measured on a
+  * larger clustered fixture.
   */
 class RecallSpec extends SparkSuite {
 
@@ -52,13 +52,13 @@ class RecallSpec extends SparkSuite {
     // at build, so an ingest batch whose distribution departs from
     // training degrades the index. Two regimes, both real: a COHERENT
     // drifted cluster (new center, tight noise) lands wholly in one old
-    // cell — recall holds, cells bloat, imbalance_r fires (BenchDrift
-    // measures 1.01 → 2.1). A DIFFUSE batch (noise 0.5: members' nearest
+    // cell — recall holds, cells bloat, imbalance_r fires (measured
+    // 1.01 → 2.1). A DIFFUSE batch (noise 0.5: members' nearest
     // old centroid is a near-tie) SPRAYS each new cluster across many
     // cells — nProbe=3 can't cover it and delta-query recall collapses
     // while base queries stay perfect. The policy response (retrain on a
     // union sample + reassign) gives drifted clusters their own cells and
-    // restores recall. BenchDrift records the full curve in BENCH_SF1.
+    // restores recall. BENCH_SF1.md records the full curve at 20k vectors.
     val root = java.nio.file.Files.createTempDirectory("graft_drift_spec")
     try {
       GenClustered.run(spark, root.toString + "/base", 4096, 64, 64, 0.05)
@@ -78,7 +78,7 @@ class RecallSpec extends SparkSuite {
       // salt per batch), noise 0.5 — diffuse relative to the base's 0.05.
       // Degradation COMPOUNDS across drifted refreshes (the second
       // batch's true neighbors compete with the first batch's spread —
-      // BenchDrift at 20k: 0.72 after one, 0.30 after two), so the gate
+      // at 20k vectors: 0.72 after one, 0.30 after two), so the gate
       // is on the second batch's queries.
       def driftBatch(b: Int): org.apache.spark.sql.DataFrame = {
         GenClustered.run(spark, root.toString + s"/delta$b", 1024, 32, 64, 0.5,

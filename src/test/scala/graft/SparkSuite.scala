@@ -33,6 +33,36 @@ trait SparkSuite extends AnyFunSuite {
   def withCells[T](cells: Int)(body: => T): T =
     graft.ops.CellLayout.cellsForSpecs.withValue(Some(cells))(body)
 
+  /** Runs `body` under a job group of its own and returns its result with
+    * the number of Spark jobs it started. A marker job flushes the
+    * listener bus before the count is read.
+    */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${java.util.UUID.randomUUID()}"
+    val flush = s"$group-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `flush` => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      // the bus delivers the marker job's start after every earlier event
+      sc.setJobGroup(flush, flush)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
 

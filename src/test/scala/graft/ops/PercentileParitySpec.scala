@@ -82,26 +82,6 @@ class PercentileParitySpec extends SparkSuite {
     }
   }
 
-  test("exactPercentileBounds feeds the quantile_cont frac form (q232 shape)") {
-    import spark.implicits._
-    val vals = (1 to 57).map(_.toDouble * 1.37)
-    val df = vals.toDF("v")
-    for (n <- Seq(56, 57)) { // even and odd counts
-      val ds = vals.take(n)
-      val sorted = ds.sorted
-      val pos = 0.5 * (n - 1)
-      val expect = sorted(math.floor(pos).toInt) +
-        (pos - math.floor(pos)) *
-          (sorted(math.ceil(pos).toInt) - sorted(math.floor(pos).toInt))
-      val Seq((gpos, lo, hi)) = withCells(4)(Quantiles.exactPercentileBounds(
-        ds.toDF("v"), col("v"), Seq(0.5)))
-      val got = lo + (gpos - math.floor(gpos)) * (hi - lo)
-      assert(java.lang.Double.doubleToLongBits(expect) ==
-        java.lang.Double.doubleToLongBits(got))
-    }
-    val _ = df // keep one DF construction on the default path
-  }
-
   test("parity on the real fixture column q10/q266 read") {
     val g = graft.Tables.load(spark, sf0001, "lineitem")
       .select(when(col("l_extendedprice").between(1000, 50000),
@@ -174,30 +154,9 @@ class PercentileParitySpec extends SparkSuite {
 
   test("job budget: one exactPercentileValues call on 60k rows runs at most 7 Spark jobs") {
     val df = spark.range(60000).select(((col("id") * 7919L) % 60001L).cast("double").as("v"))
-    val sc = spark.sparkContext
-    val group = "percentile-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case "percentile-job-budget-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val got = try {
-      sc.setJobGroup(group, group)
-      val m = try Quantiles.exactPercentileValues(df, col("v"), Seq(0.5)) finally sc.clearJobGroup()
-      // the bus delivers the marker job's start after every earlier event
-      sc.setJobGroup("percentile-job-budget-flush", "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      m
-    } finally sc.removeSparkListener(listener)
+    val (got, jobs) = jobsIn(Quantiles.exactPercentileValues(df, col("v"), Seq(0.5)))
     assert(got.map(_.map(bits)) ==
       Seq(Some(bits(df.agg(expr("median(v)")).head().getDouble(0)))))
-    assert(jobs.get() > 0 && jobs.get() <= 7, s"${jobs.get()} jobs")
+    assert(jobs > 0 && jobs <= 7, s"$jobs jobs")
   }
 }

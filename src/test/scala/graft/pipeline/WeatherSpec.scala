@@ -199,29 +199,9 @@ class WeatherSpec extends SparkSuite {
   }
 
   test("job budget: one Weather.run runs at most 8 Spark jobs") {
-    val sc = spark.sparkContext
-    val group = "weather-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case "weather-job-budget-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
     val out = java.nio.file.Files.createTempDirectory("weather_jobs").toString
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try Weather.run(spark, resource("weatherHistory_valid.csv"), out, Weather.Conf(writeHistory = true))
-      finally sc.clearJobGroup()
-      // the bus delivers the marker job's start after every earlier event
-      sc.setJobGroup("weather-job-budget-flush", "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() > 0 && jobs.get() <= 8, s"${jobs.get()} jobs")
+    val (_, jobs) = jobsIn(Weather.run(
+      spark, resource("weatherHistory_valid.csv"), out, Weather.Conf(writeHistory = true)))
+    assert(jobs > 0 && jobs <= 8, s"$jobs jobs")
   }
 }
