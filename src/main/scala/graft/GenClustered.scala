@@ -149,17 +149,7 @@ object GenClustered {
     // noise, nearly incompressible, so raw size ≈ file size).
     val rawBytes = nVec * dim * 4L
     val block = math.max(64L * 1024, math.min(8L * 1024 * 1024, rawBytes / 32))
-    embs.coalesce(1).write.mode("overwrite")
-      .option("parquet.block.size", block)
-      .parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no part file under $tmp"))
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(s"$dst/embeddings.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(tmp).listFiles().foreach(_.delete())
-    new java.io.File(tmp).delete()
+    GenScale.writeSingleParquet(embs, block, tmp, s"$dst/embeddings.parquet")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dst/CLUSTERED_VERSION"),
       stampContent(nVec, kClusters, dim, noise, centerSalt, idOffset).getBytes("UTF-8"))

@@ -129,20 +129,8 @@ object GenScale {
       val srcBytes = java.nio.file.Files.size(
         java.nio.file.Paths.get(s"$src/$name.parquet"))
       val block = math.max(256L * 1024, math.min(8L * 1024 * 1024, srcBytes * k / 32))
-      def writeOnce(rel: DataFrame, blockBytes: Long): Unit = {
-        rel.coalesce(1).write.mode("overwrite")
-          .option("parquet.block.size", blockBytes)
-          .parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file under $tmp"))
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$dst/$name.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        new java.io.File(tmp).listFiles().foreach(_.delete())
-        new java.io.File(tmp).delete()
-        ()
-      }
+      def writeOnce(rel: DataFrame, blockBytes: Long): Unit =
+        writeSingleParquet(rel, blockBytes, tmp, s"$dst/$name.parquet")
       writeOnce(df, block)
       // Second pass when the estimate misses low: the src×k sizing
       // assumes the k copies encode like the source, but e.g. embeddings'
@@ -235,5 +223,24 @@ object GenScale {
     java.nio.file.Files.write(stampPath(dst), stampContent(k).getBytes("UTF-8"))
 
     println(s"""{"gen":"$dst","k":$k,"lineitem_rows":${spark.read.parquet(s"$dst/lineitem.parquet").count()}}""")
+  }
+
+  /** Writes `df` as ONE parquet file at `path` with row groups of about
+    * `blockBytes`: a coalesced write to the scratch directory `tmp`, whose
+    * one part file then replaces `path`; `tmp` is removed. The fixture
+    * generators' one single-file writer.
+    */
+  private[graft] def writeSingleParquet(
+      df: DataFrame, blockBytes: Long, tmp: String, path: String): Unit = {
+    df.coalesce(1).write.mode("overwrite")
+      .option("parquet.block.size", blockBytes)
+      .parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no part file under $tmp"))
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(tmp).listFiles().foreach(_.delete())
+    new java.io.File(tmp).delete()
   }
 }

@@ -1,16 +1,18 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Sinks (S3/S4/S5). The reference lands single CSV files and appends into
-  * SQLite with a column-rename pass (v5_group_project_dag.py:291-365).
+  * SQLite inside transactions, with a column-rename pass
+  * (v5_group_project_dag.py:291-365).
   *
   * Spark-native defaults: parquet directories, partitioned where the
   * downstream read pattern benefits. CSV `singleFile` (coalesce(1)) exists
   * only for byte-parity with the reference — never use it at scale.
   * The JDBC sink is config-gated (no JDBC driver jar is guaranteed in the
-  * sandbox); `saveAsTable` over parquet is the default relational sink.
+  * sandbox). A load of several tables goes through [[publishParquet]]: one
+  * [[Publish]] commit, so a reader sees all of it or none of it, as the
+  * reference's transactions give.
   */
 object Sinks {
 
@@ -31,28 +33,16 @@ object Sinks {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  /** All-or-nothing publish of several parquet tables under `outDir`:
-    * each frame is written to `outDir/_staging-<uuid>/<name>`, `accept`
-    * runs once every write has landed (it throws to refuse), and only
-    * then is each staged table renamed over `outDir/<name>`. A failed
-    * write or a refusal leaves every existing table as it was; the
-    * staging directory is removed either way.
+  /** All-or-nothing publish of several parquet tables under `outDir`
+    * through [[Publish]]: each frame is staged as `<name>`, `accept` runs
+    * once every write has landed (it throws to refuse), and then the
+    * tables replace `outDir/<name>` in one commit. A failed write or a
+    * refusal leaves every existing table as it was.
     */
-  def publishParquet(outDir: String, tables: Seq[(String, DataFrame)])(accept: () => Unit): Unit = {
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(tables.head._2.sparkSession.sparkContext.hadoopConfiguration)
-    val stage = new Path(out, s"_staging-${java.util.UUID.randomUUID()}")
-    try {
-      tables.foreach { case (name, df) => parquet(df, new Path(stage, name).toString) }
-      accept()
-      tables.foreach { case (name, _) =>
-        val target = new Path(out, name)
-        fs.delete(target, true)
-        if (!fs.rename(new Path(stage, name), target))
-          throw new java.io.IOException(s"could not publish $target")
-      }
-    } finally fs.delete(stage, true)
-  }
+  def publishParquet(outDir: String, tables: Seq[(String, DataFrame)])(accept: () => Unit): Unit =
+    Publish(tables.head._2.sparkSession, outDir, Publish.Replace, tables.map(_._1)) { stage =>
+      tables.foreach { case (name, df) => parquet(df, s"$stage/$name") }
+    }(_ => accept())
 
   /** JSON-lines sink (one object per line — the interchange format most
     * curation pipelines exchange; schema travels in the data).
@@ -65,9 +55,6 @@ object Sinks {
     */
   def orc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
-
-  def table(df: DataFrame, name: String, mode: SaveMode = SaveMode.Append): Unit =
-    df.write.mode(mode).saveAsTable(name)
 
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetMb`-sized files. The streaming/micro-batch sinks above land

@@ -79,7 +79,8 @@ object Validate {
     * action's metrics). The reference's all_success semantics (nothing
     * visible on violation) then come from writing to a staging area and
     * publishing only when the thunk reports no failures
-    * (`Sinks.publishParquet`, as `Weather.run` does); [[gate]] gets them
+    * (`Sinks.publishParquet`'s `accept`, one [[Publish]] commit, as
+    * `Weather.run` does); [[gate]] gets them
     * by checking before the write, at the cost of its own pass.
     */
   def observed(df: DataFrame, checks: Seq[Check], name: String = "graft_checks"): (DataFrame, () => Seq[CheckResult]) = {

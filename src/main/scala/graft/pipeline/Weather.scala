@@ -171,9 +171,11 @@ object Weather {
     *
     * The CSV is parsed once: the gated, dedup-flagged frame is cached by
     * the median pass, which also counts malformed rows and fails the run
-    * on any. The tables are written to a staging directory with the
-    * checks observed on the writes, and published by rename only when
+    * on any. The tables are staged with the checks observed on the
+    * writes and published in one [[graft.ops.Publish]] commit only when
     * every check held; otherwise ValidationException and nothing changes.
+    * A crash mid-publish is rolled back by the next run's commit (or by
+    * `Publish.recover` on `outDir`), so the tables never mix two runs.
     */
   def run(spark: SparkSession, csvPath: String, outDir: String, conf: Conf = Conf()): (DataFrame, DataFrame) = {
     val raw = spark.read.option("header", "true").option("columnNameOfCorruptRecord", Malformed)

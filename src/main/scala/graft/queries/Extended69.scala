@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.IvfIndex
+import graft.ext.IvfIndex.Cache.{Recipe, Refreshed}
 import graft.ops.Num
 import QueryDef.tbl
 
@@ -11,7 +12,7 @@ import QueryDef.tbl
   * corpus runs refresh per ingest batch).
   *
   * Both queries serve from ONE refreshed index per fixture
-  * ([[IvfIndex.Cache.refreshedIndexFor]]): the corpus splits 90/10 by
+  * (`IvfIndex.Cache.indexFor` with `Recipe(life = Refreshed)`): the corpus splits 90/10 by
   * `vec_id % 10`, the index is built on the 90% "old" corpus (√N stride,
   * ~4√N training sample, N/64 codebook — all sized from the OLD count,
   * exactly like a deployment that trained before the delta arrived), and
@@ -73,7 +74,7 @@ object Extended69 {
     QueryDef(
       "q328_ivf_incremental_refresh",
       (s, dir) => {
-        val ix = IvfIndex.Cache.refreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Refreshed))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .serveTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -96,7 +97,7 @@ object Extended69 {
     QueryDef(
       "q329_ivfpq_refresh_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.refreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Refreshed))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -129,7 +130,7 @@ object Extended69 {
     QueryDef(
       "q330_ivf_cell_stats",
       (s, dir) => {
-        val ix = IvfIndex.Cache.refreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Refreshed))
         IvfIndex.cellStats(s, ix)
       },
       Some(s"""WITH $refreshedBuildCtes,
@@ -161,7 +162,7 @@ object Extended69 {
     QueryDef(
       "q331_semdedup_incremental",
       (s, dir) => {
-        val ix = IvfIndex.Cache.refreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Refreshed))
         IvfIndex
           .serveSemDedupFromPairs(s, ix, tbl(s, dir, "embeddings"), "vec_id")
           .orderBy("id")

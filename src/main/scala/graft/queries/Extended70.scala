@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.IvfIndex
+import graft.ext.IvfIndex.Cache.{Recipe, StreamRefreshed}
 import graft.ops.Num
 import QueryDef.tbl
 
@@ -75,7 +76,7 @@ object Extended70 {
     QueryDef(
       "q332_pq_trained_codebook",
       (s, dir) => {
-        val ix = IvfIndex.Cache.trainedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(trainedCodebook = true))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -105,7 +106,7 @@ object Extended70 {
     QueryDef(
       "q333_stream_refresh_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.streamRefreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = StreamRefreshed))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .serveTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.IvfIndex
+import graft.ext.IvfIndex.Cache.{Recipe, HiRes, Rebuilt}
 import graft.ops.Num
 import QueryDef.tbl
 
@@ -21,8 +22,8 @@ import QueryDef.tbl
   * q335/q336: the monitor's rebuild trigger (q330's imbalance_r) finally
   * has a callable target — [[graft.ext.IvfIndex.rebuild]] retrains on the
   * accumulated corpus read from the index's own inverted file, rebuilds
-  * the pairs artifact at its baked threshold, and swaps everything in
-  * under the crash-recovery marker. The gate is an IDENTITY: build(90%) →
+  * the pairs artifact at its baked threshold, and replaces everything in
+  * one crash-safe `ops.Publish` commit. The gate is an IDENTITY: build(90%) →
   * refresh(10%) → rebuild must serve exactly like a FRESH build on the
   * full corpus (rebuild re-derives √N'/4√N'/N'/64 from the union count,
   * and the invfile round-trips every vector bit-exactly), so q335 reuses
@@ -145,7 +146,7 @@ object Extended71 {
     QueryDef(
       "q334_pq_hires_adc_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.hiResIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -160,13 +161,13 @@ object Extended71 {
     // ----- q335: IVF-Flat serve after a full REBUILD ---------------------
     // The lifecycle's close: the rebuilt index must be indistinguishable
     // from a fresh build on the accumulated corpus — q324's oracle,
-    // verbatim. The serve plan reads ONLY post-swap artifacts, so a swap
+    // verbatim. The serve plan reads ONLY committed artifacts, so a commit
     // that left any component stale (old centroids with new lists, old
     // codebook, leftover staging) mismatches here.
     QueryDef(
       "q335_rebuild_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.rebuiltIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Rebuilt))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .serveTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -185,7 +186,7 @@ object Extended71 {
     QueryDef(
       "q336_rebuild_pairs_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.rebuiltIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(life = Rebuilt))
         IvfIndex
           .serveSemDedupFromPairs(s, ix, tbl(s, dir, "embeddings"), "vec_id")
           .orderBy("id")
@@ -205,7 +206,7 @@ object Extended71 {
     QueryDef(
       "q337_pq_residual_adc_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.residualIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.IvfIndex
+import graft.ext.IvfIndex.Cache.{Recipe, HiRes, Refreshed, Rebuilt}
 import graft.ops.Num
 import QueryDef.tbl
 
@@ -12,10 +13,11 @@ import QueryDef.tbl
   * were raw-only: [[IvfIndex.refresh]] encoded delta vectors RAW against
   * whatever codebook the index persisted, and [[IvfIndex.rebuild]] staged
   * through the raw [[IvfIndex.build]] — on a residual index either one
-  * silently corrupts the ADC path (the `_PQ_RESIDUAL` sidecar survives,
+  * silently corrupts the ADC path (the `_PQ_RESIDUAL` flag survives,
   * servePqResidualTopK keeps accepting the index, and the exact-rerank
   * vectors are untouched, so nothing errors; only serve ranks go wrong).
-  * Both now key on the sidecar; these two queries put each branch under
+  * Both now key on the flag (which lives in `codebook/`, so a rebuild
+  * replaces it with the codebook it describes); these two queries put each branch under
   * the hash gate.
   *
   * q338: buildResidual(90%) → refresh(10%) → residual ADC serve. The
@@ -29,7 +31,7 @@ import QueryDef.tbl
   *
   * q339: buildResidual(90%) → refresh(10%) → rebuild → residual ADC
   * serve. rebuild must stage through buildResidual at union-derived
-  * parameters, so the swapped index equals a FRESH buildResidual on the
+  * parameters, so the committed index equals a FRESH buildResidual on the
   * full corpus — q337's oracle, verbatim (the identity q335 pins for the
   * raw lifecycle).
   */
@@ -46,7 +48,7 @@ object Extended72 {
     QueryDef(
       "q338_residual_refresh_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.residualRefreshedIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true, life = Refreshed))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
@@ -62,7 +64,7 @@ object Extended72 {
     QueryDef(
       "q339_residual_rebuild_serve",
       (s, dir) => {
-        val ix = IvfIndex.Cache.residualRebuiltIndexFor(s, dir)
+        val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true, life = Rebuilt))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
           .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.ext.{IvfIndex, Similarity}
 
 /** Round-16 lifecycle surface: [[IvfIndex.rebuild]] (q335/q336's
-  * operator), the swap crash-recovery marker, the pre-sidecar pairs
-  * adopt path, and the GenClustered stamp guard. The DuckDB oracles pin
+  * operator), crash recovery of its and compact's commits, the pairs
+  * threshold guard, and the GenClustered stamp guard. The DuckDB oracles pin
   * the serve-level identities at sf0.01/sf0.1; these tests pin the
   * artifact- and failure-path mechanics the relation gates can't see.
   */
@@ -49,19 +49,20 @@ class Extended71Spec extends SparkSuite {
     val lifecycle = java.nio.file.Files.createTempDirectory("graft_rb_life").toString
     val fresh = java.nio.file.Files.createTempDirectory("graft_rb_fresh").toString
     try {
-      buildDerived(old, old.count(), lifecycle)
-      IvfIndex.buildPairs(spark, lifecycle, 0.4)
-      IvfIndex.refresh(spark, lifecycle, delta, "vec_id", "embedding", nSub, subDim,
-        pairThreshold = Some(0.4))
-      IvfIndex.rebuild(spark, lifecycle, nSub, subDim)
+      // a crash after any step of any of these commits recovers to the
+      // index before that commit or after it
+      everyCrashRecovers(lifecycle)(buildDerived(old, old.count(), lifecycle))
+      everyCrashRecovers(lifecycle)(IvfIndex.buildPairs(spark, lifecycle, 0.4))
+      everyCrashRecovers(lifecycle)(IvfIndex.refresh(spark, lifecycle, delta, "vec_id",
+        "embedding", nSub, subDim, pairThreshold = Some(0.4)))
+      everyCrashRecovers(lifecycle)(IvfIndex.rebuild(spark, lifecycle, nSub, subDim))
       buildDerived(emb, emb.count(), fresh)
       IvfIndex.buildPairs(spark, fresh, 0.4)
       for (c <- Seq("centroids", "codebook", "invfile", "pairs"))
         contentEqual(s"$lifecycle/$c", s"$fresh/$c")
-      // no staging/marker/retired residue after a clean rebuild
-      val leftovers = new java.io.File(lifecycle).listFiles().map(_.getName)
-        .filter(n => n.contains("__") || n == "_SWAP_IN_PROGRESS")
-      assert(leftovers.isEmpty, s"rebuild left residue: ${leftovers.mkString(",")}")
+      // no journal, staging or checksum residue after a clean rebuild
+      assert(entries(lifecycle) == Seq("centroids", "codebook", "invfile", "pairs"),
+        s"rebuild left residue: ${entries(lifecycle).mkString(",")}")
       // the rebuilt pairs sidecar carries the baked threshold forward
       assert(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$lifecycle/pairs/_THRESHOLD")), "UTF-8").trim == "0.4")
@@ -81,51 +82,44 @@ class Extended71Spec extends SparkSuite {
         .serveTopK(spark, dir, q, "vec_id", "embedding", k = 3, nProbe = 2)
         .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val before = serveSet()
-      val root = java.nio.file.Paths.get(dir)
-      def marker() = root.resolve("_SWAP_IN_PROGRESS")
+      val live = snapshot(dir)
 
-      // crash point A: retired, live missing, staged half-written
-      java.nio.file.Files.write(marker(), "invfile".getBytes("UTF-8"))
-      java.nio.file.Files.move(root.resolve("invfile"), root.resolve("invfile__retired"))
-      java.nio.file.Files.createDirectory(root.resolve("invfile__staged"))
-      assert(IvfIndex.recover(dir))
-      assert(!java.nio.file.Files.exists(marker()))
-      assert(!java.nio.file.Files.exists(root.resolve("invfile__staged")))
+      // compact, stopped with its inverted file moved in and the journal
+      // still present: a serve entry point rolls it back on its own
+      stoppedAt("moved invfile")(IvfIndex.compact(spark, dir))
+      assert(entries(dir).contains("_journal"))
       assert(serveSet() == before)
+      assert(snapshot(dir) == live)
 
-      // crash point B: promoted (bogus live) but marker still present —
-      // recovery must roll BACK to the retired artifact; exercised through
-      // a serve entry point (no explicit recover call)
-      java.nio.file.Files.write(marker(), "invfile".getBytes("UTF-8"))
-      java.nio.file.Files.move(root.resolve("invfile"), root.resolve("invfile__retired"))
-      java.nio.file.Files.createDirectory(root.resolve("invfile"))
-      java.nio.file.Files.write(root.resolve("invfile").resolve("junk"), "x".getBytes)
+      // rebuild, stopped between retiring the live centroids and moving
+      // the new ones in: no centroids/ at all until recover
+      stoppedAt("retired centroids")(IvfIndex.rebuild(spark, dir, nSub, subDim))
+      assert(!entries(dir).contains("centroids"))
+      assert(graft.ops.Publish.recover(spark, dir))
+      assert(snapshot(dir) == live)
       assert(serveSet() == before)
-      assert(!java.nio.file.Files.exists(marker()))
 
       // healthy index: recover is a no-op
-      assert(!IvfIndex.recover(dir))
+      assert(!graft.ops.Publish.recover(spark, dir))
+      // a crash after any step of a compact recovers to either side
+      everyCrashRecovers(dir)(IvfIndex.compact(spark, dir))
     } finally graft.queries.QueryDef.rmTree(java.nio.file.Paths.get(dir))
   }
 
-  test("pre-sidecar pairs/ artifact is adopted once on refresh; threshold mismatch still fails fast") {
+  test("a pairs/ without its _THRESHOLD fails fast on a pair-maintaining refresh") {
     val (_, old, delta) = smallSplit(300)
     val dir = java.nio.file.Files.createTempDirectory("graft_rb_adopt").toString
     try {
       buildDerived(old, old.count(), dir)
       IvfIndex.buildPairs(spark, dir, 0.4)
-      val sidecar = java.nio.file.Paths.get(s"$dir/pairs/_THRESHOLD")
-      java.nio.file.Files.delete(sidecar) // simulate a pre-sidecar artifact
-      IvfIndex.refresh(spark, dir, delta, "vec_id", "embedding", nSub, subDim,
-        pairThreshold = Some(0.4))
-      assert(java.nio.file.Files.exists(sidecar), "adopt path must write the sidecar")
-      assert(new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8").trim == "0.4")
-      // adopted artifact now validates like a native one
-      val e = intercept[Exception] {
+      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/pairs/_THRESHOLD"))
+      val before = snapshot(dir)
+      val e = intercept[RuntimeException] {
         IvfIndex.refresh(spark, dir, delta, "vec_id", "embedding", nSub, subDim,
-          pairThreshold = Some(0.5))
+          pairThreshold = Some(0.4))
       }
-      assert(e.getMessage.contains("0.4"))
+      assert(e.getMessage.contains("run buildPairs"), e.getMessage)
+      assert(snapshot(dir) == before, "a refused refresh changed the index")
     } finally graft.queries.QueryDef.rmTree(java.nio.file.Paths.get(dir))
   }
 

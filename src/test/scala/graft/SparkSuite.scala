@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (getOrCreate reuses one JVM-wide
   * session; per-suite sessions would pay Spark startup per file).
@@ -65,6 +66,70 @@ trait SparkSuite extends AnyFunSuite {
 
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath
+
+  /** Every file under `dir` (relative path → bytes), so a replaced part
+    * file shows even when its contents are the same.
+    */
+  def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    finally files.close()
+  }
+
+  /** The names directly under `dir`, sorted (none if it does not exist). */
+  def entries(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  /** What [[stoppedAt]] throws to stop a commit. */
+  final class Stopped(step: String) extends RuntimeException(s"stopped after $step")
+
+  /** Runs `body`, stopping the first `ops.Publish` commit it makes right
+    * after `step` (as a crash there would, minus the process exit).
+    */
+  def stoppedAt(step: String)(body: => Unit): Unit =
+    intercept[Stopped] {
+      graft.ops.Publish.afterStep.withValue(s => if (s == step) throw new Stopped(s))(body)
+    }
+
+  /** Whether `Publish.recover` after `step` rolls the commit forward (its
+    * staging directory, with the retired copies, is already renamed away)
+    * rather than back.
+    */
+  def rollsForward(step: String): Boolean = step.startsWith("staging ")
+
+  /** Runs `commit` (one `ops.Publish` commit on `root`) once, copying
+    * `root` after each of its steps as a crash there would leave it, then
+    * checks that `Publish.recover` brings every copy to the files before
+    * the commit or after it, with no residue. A crash before the journal
+    * leaves an orphaned staging directory, which only the next commit
+    * removes.
+    */
+  def everyCrashRecovers(root: String)(commit: => Unit): Unit = {
+    import java.nio.file.{Files, Paths}
+    val old = snapshot(root)
+    val copies = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    graft.ops.Publish.afterStep.withValue { step =>
+      val copy = Files.createTempDirectory("graft_crash_copy")
+      val files = Files.walk(Paths.get(root))
+      try files.iterator().asScala.toVector.foreach { p =>
+        val to = copy.resolve(Paths.get(root).relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      } finally files.close()
+      copies += step -> copy.toString
+    }(commit)
+    val fresh = snapshot(root)
+    assert(fresh != old && copies.map(_._1).contains("journaled"))
+    val preJournal = Set("staged", "accepted")
+    for ((step, copy) <- copies) {
+      assert(graft.ops.Publish.recover(spark, copy) == !preJournal(step), s"after $step")
+      val (orphans, live) = snapshot(copy).partition(_._1.startsWith("_staging-"))
+      assert(live == (if (rollsForward(step)) fresh else old), s"after $step")
+      assert(orphans.nonEmpty == preJournal(step), s"after $step")
+      graft.queries.QueryDef.rmTree(Paths.get(copy))
+    }
+  }
 
   /** Pre-order walk of a physical plan that pierces the wrapper nodes
     * (AQE root, query stages, reused exchanges) — the ONE traversal every

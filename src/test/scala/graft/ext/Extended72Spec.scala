@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Round-16 part 2: the RESIDUAL-coded index's lifecycle mechanics. The
   * q338/q339 oracles pin the serve-level identities; these tests pin the
   * artifact-level facts the relation gates can't see — which SPACE the
-  * refreshed delta codes live in, the sidecar surviving a rebuild, and
-  * the cross-layout serve/rebuild refusals.
+  * refreshed delta codes live in, the codebook's residual flag
+  * surviving a rebuild, and the cross-layout serve/rebuild refusals.
   */
 class Extended72Spec extends SparkSuite {
 
@@ -23,7 +23,7 @@ class Extended72Spec extends SparkSuite {
   }
 
   /** The battery's derived-parameter residual build
-    * ([[IvfIndex.Cache.residualIndexFor]]'s recipe) on an explicit
+    * (`IvfIndex.Cache.Recipe(HiRes, residual = true)`) on an explicit
     * corpus — the exact parameterization rebuild re-derives.
     */
   private def buildResidualDerived(corpus: org.apache.spark.sql.DataFrame,

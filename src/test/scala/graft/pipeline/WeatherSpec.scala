@@ -134,20 +134,6 @@ class WeatherSpec extends SparkSuite {
       cleaned, Seq("Month"), "Precip Type", "mode_precipitation_type"), "Month", "mode_precipitation_type"))
   }
 
-  /** Every file under `dir` (relative path → bytes), so a replaced part
-    * file shows even when its contents are the same.
-    */
-  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
-    val root = java.nio.file.Paths.get(dir)
-    val files = java.nio.file.Files.walk(root)
-    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
-    finally files.close()
-  }
-
-  private def entries(dir: String): Seq[String] =
-    Option(new java.io.File(dir).list()).map(_.toSeq.sorted).getOrElse(Nil)
-
   private val tables = Seq("daily_weather", "monthly_weather", "weather_history")
 
   test("a failed run leaves the previous run's tables as they were") {
