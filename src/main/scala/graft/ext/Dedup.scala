@@ -369,6 +369,11 @@ object Dedup {
     verifiedJaccard(cand, shL, shR, sizesL, sizesR, threshold)
   }
 
+  /** Round cap of [[connectedComponents]] (two hops per round): a
+    * component that has not converged by then fails loudly.
+    */
+  private val MaxIter = 25
+
   /** Connected components over an undirected pair relation (a_id, b_id)
     * — the clustering step that turns near-dup PAIRS into dedup GROUPS
     * (keep min-id per component, drop the rest). Iterative min-label
@@ -391,8 +396,7 @@ object Dedup {
     * Same plan either way, only the storage tier changes.
     */
   def connectedComponents(
-      pairs: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame = {
+      pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     def ckpt(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint()
@@ -424,7 +428,7 @@ object Dedup {
     }
     var changed = true
     var i = 0
-    while (changed && i < maxIter) {
+    while (changed && i < MaxIter) {
       // TWO hops per materialization round, with the prior label carried
       // as __old: halves the checkpoint+count job overhead per converged
       // distance (propagation is monotone, so extra steps never
@@ -439,7 +443,7 @@ object Dedup {
       labels = next.select(col("node"), col("label"))
       i += 1
     }
-    require(!changed, s"connectedComponents did not converge in $maxIter rounds")
+    require(!changed, s"connectedComponents did not converge in $MaxIter rounds")
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 

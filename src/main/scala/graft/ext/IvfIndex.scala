@@ -401,39 +401,28 @@ object IvfIndex {
     * refresh of the whole delta — q333 puts that identity under the hash
     * gate by serving the streamed artifact against q328's oracle.
     *
-    * The harness writes `delta` to a temp dir as `nSourceFiles` parquet
-    * files and replays them `filesPerBatch` per trigger
-    * (Trigger.AvailableNow — drain everything, then stop), the same
-    * file-replay mechanics as the q151/q322 streaming battery; a
-    * production deployment points `readStream` at its landing zone (or
-    * Kafka, when a connector jar exists) instead.
+    * `delta` is written to a temp dir as three parquet files and
+    * replayed one file per micro-batch through [[Streaming.drain]], the
+    * driver of the q151/q322 streaming battery; a production deployment
+    * points `readStream` at its landing zone (or Kafka, when a connector
+    * jar exists) instead. The refresh jobs run at the session's shuffle
+    * width, not the replay width.
     */
   def refreshStream(
       spark: SparkSession, indexDir: String, delta: DataFrame,
       idCol: String, embCol: String, nSub: Int, subDim: Int,
-      pairThreshold: Option[Double] = None, nSourceFiles: Int = 3,
-      filesPerBatch: Int = 1): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = java.nio.file.Files.createTempDirectory("graft_ix_stream_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ix_stream_ck")
+      pairThreshold: Option[Double] = None): Unit = {
+    val src = java.nio.file.Files.createTempDirectory(Streaming.TmpPrefix + "ix_src")
     try {
-      delta.repartition(nSourceFiles).write.mode("overwrite").parquet(src.toString)
-      val q = spark.readStream
+      delta.repartition(3).write.mode("overwrite").parquet(src.toString)
+      val stream = spark.readStream
         .schema(delta.schema)
-        .option("maxFilesPerTrigger", filesPerBatch)
+        .option("maxFilesPerTrigger", 1)
         .parquet(src.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          refresh(spark, indexDir, b, idCol, embCol, nSub, subDim, pairThreshold)
-        }
-        .start()
-      q.awaitTermination()
-    } finally {
-      graft.queries.QueryDef.rmTree(src)
-      graft.queries.QueryDef.rmTree(ckpt)
-    }
+      Streaming.drain(stream, "append") { (b, _) =>
+        refresh(spark, indexDir, b, idCol, embCol, nSub, subDim, pairThreshold)
+      }
+    } finally graft.queries.QueryDef.rmTree(src)
   }
 
   /** The probe stage, executed EXACTLY ONCE: run
@@ -755,8 +744,6 @@ object IvfIndex {
     * directory in one commit. Content is bit-identical (parquet
     * round-trips the doubles and codes exactly), so serve plans are
     * unchanged — Extended69Spec pins serve-identity across a compact.
-    * `maxRecordsPerFile` > 0 re-splits oversized cells (a skew-era cell
-    * can outgrow one task's comfort zone) at the parquet writer level.
     *
     * The commit is a [[graft.ops.Publish.Replace]] of `invfile/`: the
     * staged tree must hold as many rows as the live one, or the commit is
@@ -764,13 +751,11 @@ object IvfIndex {
     * as [[refresh]] (concurrent serves reading the old listing finish
     * against intact files; local FS keeps open fds valid across rename).
     */
-  def compact(
-      spark: SparkSession, indexDir: String, maxRecordsPerFile: Long = 0): Unit =
+  def compact(spark: SparkSession, indexDir: String): Unit =
     commit(spark, indexDir, Publish.Replace, Seq("invfile")) { stage =>
       spark.read.parquet(s"$indexDir/invfile")
         .repartition(col("cent_id"))
         .write
-        .option("maxRecordsPerFile", maxRecordsPerFile)
         .partitionBy("cent_id").parquet(s"$stage/invfile")
     } { stage =>
       // A compacted tree that silently dropped rows must never replace the

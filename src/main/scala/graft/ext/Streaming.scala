@@ -1,8 +1,11 @@
 package graft.ext
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.LongType
+import graft.queries.QueryDef
 import graft.schema.Schemas
 
 /** Structured Streaming surface (SURVEY.md §2.10). The reference is a
@@ -22,73 +25,132 @@ import graft.schema.Schemas
   */
 object Streaming {
 
-  /** Run `body` (typically: start a StreamingQuery and await it) with the
-    * session's shuffle width temporarily set to `n`, restoring the prior
-    * value afterwards (no conf ratchets — the r10 buildBloom lesson).
+  /** The ONE definition of the bounded-replay stream width; a cluster
+    * deploy sets `graft.stream.shuffle.width` on the session instead.
     *
-    * WHY (r16 measurement): every stateful streaming operator opens one
-    * state-store instance per shuffle partition per store (a stream-stream
-    * join opens FOUR per partition per side) in EVERY micro-batch, and the
-    * HDFS-backed provider pays file create/commit per instance per batch.
-    * On the bounded single-box replays the battery runs, that fixed cost
-    * dominates the actual data: q317 measured 14.5 s at 32 partitions vs
-    * 5.7 s at 4 (round-11 note), and r16's sweep found the same shape in
-    * every stream entry still running at the session default. The width is
-    * baked into each query's EPHEMERAL checkpoint at batch 0, so it is a
-    * per-run deploy knob: a production cluster sizes it to executors ×
-    * cores like any stateful job; 4 fits a single-box ~100k-row replay.
-    * It also matches the width the correctness gate verifies at
-    * (Verify.scala defaults to 4 cpus / 4 shuffle partitions).
-    */
-  /** The ONE definition of the bounded-replay stream width (r16 verdict
-    * item: nine call sites carried the literal 4 — a cluster deploy now
-    * changes this line, or sets `graft.stream.shuffle.width` on the
-    * session, instead of editing every stream query). r17 re-measured the
-    * width sweep on the full stream family: state-store instances (and
-    * their per-batch commit cost, ~50 ms each on ≤4 rows) scale with the
-    * partition count, so 2 beats 4 by 10–20% on every replay
-    * (q322 6.2→5.1 s, q317 4.6→4.1, q271 1.9→1.7), while 1 collapses the
-    * batch-0 join/agg compute onto one task and LOSES (q322 7.4, q152
-    * 4.4 — data work needs ≥2 ways even at 100k rows). Production sizes
-    * it to executors × cores via the conf; the Verify gate exercises the
-    * same helper, so correctness and bench always run the same width.
+    * WHY: every stateful streaming operator opens one state-store
+    * instance per shuffle partition per store (a stream-stream join opens
+    * FOUR per partition per side) in EVERY micro-batch, and the
+    * HDFS-backed provider pays file create/commit (~50 ms on ≤4 rows) per
+    * instance per batch. On the bounded single-box replays the battery
+    * runs, that fixed cost dominates the data: q317 measured 14.5 s at
+    * 32 partitions vs 5.7 s at 4, and 2 beats 4 by 10–20% on every
+    * replay (q322 6.2→5.1 s, q317 4.6→4.1, q271 1.9→1.7), while 1
+    * collapses the batch-0 join/agg compute onto one task and loses
+    * (q322 7.4, q152 4.4). The width is baked into each query's
+    * EPHEMERAL checkpoint at batch 0, so it is a per-run deploy knob: a
+    * production cluster sizes it to executors × cores like any stateful
+    * job. The Verify gate runs the same driver, so correctness and bench
+    * always run the same width.
     */
   val LocalReplayWidth = 2
 
-  /** [[withStreamShuffleWidth]] at the deploy-knob width: the session
-    * conf `graft.stream.shuffle.width` when set, else [[LocalReplayWidth]].
-    */
-  def withReplayWidth[T](s: SparkSession)(body: => T): T =
-    withStreamShuffleWidth(
-      s, s.conf.getOption("graft.stream.shuffle.width")
-        .map(_.toInt).getOrElse(LocalReplayWidth))(body)
+  /** Name prefix of every temporary directory the stream driver makes. */
+  val TmpPrefix = "graft_stream_"
 
-  def withStreamShuffleWidth[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // r17: also skip the trailing NO-DATA micro-batch. Profiled on q322:
-    // each tail batch costs ~1.0 s of pure state-store commit overhead
-    // (~0.75 s commitTimeMs on ≤4 rows) regardless of data, and the
-    // replay design NEVER needs the no-data batch — the sentinel
-    // contract (appendWatermarkSentinels, pinned by StreamingSpec
-    // "sentinel-flush contract") guarantees every real window flushes
-    // with no-data batches OFF: sentinel batch 1 advances the watermark,
-    // sentinel batch 2 evicts under it. Set/restore, same as the width.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set(key, n.toString)
-    s.conf.set(ndKey, "false")
-    try body finally {
-      s.conf.set(key, prev)
-      s.conf.set(ndKey, prevNd)
+  private val WidthKey = "spark.sql.shuffle.partitions"
+  // the replay never needs the trailing NO-DATA micro-batch, which costs
+  // ~1 s of pure state-store commit per run (profiled on q322): the
+  // sentinel contract ([[appendWatermarkSentinels]]) flushes every real
+  // window without it
+  private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Session confs a replay sets; [[land]] restores all of them. The
+    * state-store provider is set by the transformWithState operators
+    * while their plan is built.
+    */
+  private val ReplayConfs =
+    Seq(WidthKey, NoDataKey, "spark.sql.streaming.stateStore.providerClass")
+
+  private def withReplayConfs[T](s: SparkSession)(body: => T): T = {
+    val prior = ReplayConfs.map(k => k -> s.conf.getOption(k))
+    s.conf.set(WidthKey, s.conf.getOption("graft.stream.shuffle.width")
+      .getOrElse(LocalReplayWidth.toString))
+    s.conf.set(NoDataKey, "false")
+    try body finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
-  /** File-source stream over an events parquet directory (replays the
-    * fixture as a stream). maxFilesPerTrigger throttles micro-batches so
-    * tests exercise multi-batch accumulation.
+  /** Run `stream` as ONE bounded query — the reference's @daily batch
+    * loop expressed as Trigger.AvailableNow (process everything currently
+    * in the source, then stop) — handing each micro-batch and its id to
+    * `sink`. The checkpoint is a temporary directory, deleted when the
+    * query ends or fails.
     */
-  def eventsFileStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
+  def drain(stream: DataFrame, outputMode: String)(sink: (DataFrame, Long) => Unit): Unit = {
+    val ckpt = Files.createTempDirectory(TmpPrefix + "ck")
+    try stream.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(sink)
+      .start()
+      .awaitTermination()
+    finally QueryDef.rmTree(ckpt)
+  }
+
+  /** The parquet landing of one micro-batch. In complete mode every batch
+    * carries the whole result table and overwrites the sink. In append and
+    * update mode each batch lands under `batch_id=<id>/` with dynamic
+    * partition overwrite, so a RETRIED batch replaces its own partition
+    * instead of duplicating it — exactly-once files from at-least-once
+    * batch delivery, without a transactional table format.
+    */
+  private[graft] def landing(sink: String, outputMode: String)(batch: DataFrame, id: Long): Unit =
+    if (outputMode == "complete") batch.write.mode("overwrite").parquet(sink)
+    else batch.withColumn("batch_id", lit(id)).write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(sink)
+
+  /** [[drain]] `stream` through [[landing]] into a temporary sink and
+    * return the landed rows, materialized (localCheckpoint) so the sink
+    * can be deleted before the caller reads them; append and update
+    * results carry the `batch_id` column. `stream` is built inside the
+    * replay confs ([[LocalReplayWidth]], no no-data batches), which are
+    * restored afterwards, whatever its operators set meanwhile.
+    */
+  def land(spark: SparkSession, outputMode: String)(stream: => DataFrame): DataFrame = {
+    val sink = Files.createTempDirectory(TmpPrefix + "sink")
+    try {
+      val streamed = withReplayConfs(spark) {
+        val df = stream
+        drain(df, outputMode)(landing(sink.toString, outputMode))
+        df.schema
+      }
+      // declared, so a replay that emitted no rows reads back empty
+      val landed =
+        if (outputMode == "complete") streamed else streamed.add("batch_id", LongType)
+      spark.read.schema(landed).parquet(sink.toString).localCheckpoint(true)
+    } finally QueryDef.rmTree(sink)
+  }
+
+  /** Replay the `eventsFile` fixture as a file-source stream through
+    * `query` and [[land]] the result. File streams need a directory
+    * source, so the file is copied into a temporary one, deleted at the
+    * end. With a `sentinelIdBase`, [[appendWatermarkSentinels]] follows
+    * the copy, for queries whose append-mode output is held back by the
+    * watermark.
+    */
+  def replay(
+      spark: SparkSession, eventsFile: String, outputMode: String,
+      sentinelIdBase: Option[Long] = None)(query: DataFrame => DataFrame): DataFrame = {
+    val src = Files.createTempDirectory(TmpPrefix + "src")
+    try {
+      Files.copy(Paths.get(eventsFile), src.resolve("events.parquet"))
+      sentinelIdBase.foreach(appendWatermarkSentinels(spark, eventsFile, src, _))
+      land(spark, outputMode)(query(eventsFileStream(spark, src.toString)))
+    } finally QueryDef.rmTree(src)
+  }
+
+  /** File-source stream over an events parquet directory (replays the
+    * fixture as a stream), one file per micro-batch, so a multi-file
+    * source exercises multi-batch accumulation.
+    */
+  def eventsFileStream(spark: SparkSession, dir: String): DataFrame = {
     // A streaming source needs a DECLARED schema, but the fixture's ts has
     // shipped as both TIMESTAMP(NANOS) (→ legacy nanos-as-long) and plain
     // TIMESTAMP(MICROS) (→ TIMESTAMP_NTZ) across generations. One batch
@@ -107,7 +169,7 @@ object Streaming {
       if (nanosAsLong) Schemas.eventsRaw else Schemas.eventsRawMicros
     val raw = spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(dir)
     if (nanosAsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw.withColumn("ts", col("ts").cast("timestamp"))
@@ -401,40 +463,13 @@ object Streaming {
       .transformWithState(new ExactTotalsProcessor, TimeMode.None(), OutputMode.Update())
   }
 
-  /** foreachBatch sink: idempotent micro-batch landing. Each batch writes
-    * under `batch_id=<id>/` with dynamic partition overwrite, so a
-    * RETRIED batch replaces its own partition instead of duplicating it —
-    * exactly-once files from at-least-once batch delivery, without a
-    * transactional table format. This is the production pattern for
-    * sinks Structured Streaming has no native connector for (JDBC
-    * upserts, external APIs): foreachBatch hands you the micro-batch as a
-    * plain DataFrame plus a monotonic batch id to key idempotence on.
+  /** First sentinel event time (2027-01-01 UTC, micros) — readouts that
+    * cannot exclude sentinels structurally filter event times below this.
     */
-  def runForeachBatchParquet(df: DataFrame, path: String, queryName: String): Unit = {
-    val q: StreamingQuery = df.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch
-          .withColumn("batch_id", lit(id))
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
-      }
-      .start()
-    q.awaitTermination()
-  }
+  val SentinelEpochUs: Long = 1798761600000000L
 
-  /** Drain a (bounded) stream into an in-memory table and return the
-    * result — the reference's @daily batch loop expressed as
-    * Trigger.AvailableNow (process everything currently in the source,
-    * then stop). Used by tests and the batch-replay path.
-    */
-  /** Append two far-future sentinel files to a file-stream source dir so
-    * an AvailableNow replay flushes watermark-held state (outer-join
+  /** Append far-future sentinel files to a file-stream source dir so an
+    * AvailableNow replay flushes watermark-held state (outer-join
     * eviction, buffered windows). Each file carries one `signup` and one
     * `purchase` row at `user_id = -1` — rows on BOTH sides of the
     * q271-family join, because the GLOBAL watermark is the min of the
@@ -446,15 +481,9 @@ object Streaming {
     * the helper works in a fresh session on any fixture generation.
     * Callers exclude `user_id < 0` rows from their readout.
     */
-  /** First sentinel event time (2027-01-01 UTC, micros) — readouts that
-    * cannot exclude sentinels structurally filter event times below this.
-    */
-  val SentinelEpochUs: Long = 1798761600000000L
-
   def appendWatermarkSentinels(
       spark: SparkSession, fixtureEventsPath: String,
-      srcDir: java.nio.file.Path, idBase: Long, scratchPrefix: String,
-      nSentinels: Int = 2): Unit = {
+      srcDir: java.nio.file.Path, idBase: Long, nSentinels: Int = 2): Unit = {
     import scala.jdk.CollectionConverters._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(fixtureEventsPath)
@@ -492,29 +521,19 @@ object Streaming {
         .select(col("__id").as("event_id"), sentinelTs(us).as("ts"),
           lit(-1L).as("user_id"), col("__t").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props"))
-      val scratch = java.nio.file.Files.createTempDirectory(s"$scratchPrefix$k")
-      sent.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val ls = java.nio.file.Files.list(scratch)
-      val part =
-        try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-        finally ls.close()
-      val dest = srcDir.resolve(f"zz_sentinel_$k.parquet")
-      java.nio.file.Files.copy(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() + k * 20000L))
-      graft.queries.QueryDef.rmTree(scratch)
+      val scratch = Files.createTempDirectory(TmpPrefix + "sentinel")
+      try {
+        sent.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+        val ls = Files.list(scratch)
+        val part =
+          try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+          finally ls.close()
+        val dest = srcDir.resolve(f"zz_sentinel_$k.parquet")
+        Files.copy(part, dest)
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis() + k * 20000L))
+      } finally QueryDef.rmTree(scratch)
     }
-  }
-
-  def runAvailableNow(df: DataFrame, queryName: String, outputMode: String = "append"): DataFrame = {
-    val q: StreamingQuery = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    df.sparkSession.table(queryName)
   }
 }

@@ -116,8 +116,6 @@ object Text {
     stop * 0.4 + ttr * 0.3 + lenSat * 0.3
   }
 
-  def qualityScore(c: Column): Column = qualityScoreFromTokens(tokensNorm(c))
-
   /** Engine-independent 32-bit token hash: the first 8 hex digits of
     * md5(token), parsed as an integer. md5 hashes the UTF-8 bytes
     * identically in Spark and DuckDB (unlike xxhash64/murmur3, whose bit

@@ -20,19 +20,14 @@ object Scale {
     * replicated n× with every salt value, and the join key becomes
     * (key, salt). Result is row-identical to the plain join; the hot
     * key's rows spread over n reducers at the cost of an n× blow-up of
-    * the (small) build side. Only inner/left are supported: for
-    * right/full, unmatched small-side replicas would surface n times.
+    * the (small) build side.
     */
-  def saltedJoin(
-      large: DataFrame, small: DataFrame, key: String, n: Int,
-      joinType: String = "inner"): DataFrame = {
-    require(Set("inner", "left", "left_outer").contains(joinType),
-      s"saltedJoin supports inner/left only, got $joinType")
+  def saltedJoin(large: DataFrame, small: DataFrame, key: String, n: Int): DataFrame = {
     val salted = large.withColumn(
       "__salt", pmod(xxhash64(large.columns.map(col).toSeq: _*), lit(n)))
     val replicated = small.withColumn("__salt", explode(sequence(lit(0L), lit(n - 1L))))
     salted
-      .join(replicated, Seq(key, "__salt"), joinType)
+      .join(replicated, Seq(key, "__salt"))
       .drop("__salt")
   }
 

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Streaming
 import graft.ops.Num
@@ -11,8 +10,8 @@ import QueryDef.tbl
 /** Round-7 batch: a driver-visible STREAMING entry. Every other battery
   * query is a batch plan; `ext/Streaming.scala` was spec-tested only. q151
   * closes that gap: its Spark side runs an actual `StreamingQuery`
-  * (file-source replay → stateful window agg → idempotent foreachBatch
-  * parquet sink, `Trigger.AvailableNow`), so the oracle hash-match certifies
+  * (`Streaming.replay`: file-source replay → stateful window agg →
+  * idempotent foreachBatch parquet sink), so the oracle hash-match certifies
   * the streaming execution path end-to-end, not a batch twin.
   */
 object Extended11 {
@@ -30,8 +29,6 @@ object Extended11 {
     * by construction even where unconverged.
     */
   private val BfRounds = 6
-
-  private def rmTree(p: java.nio.file.Path): Unit = QueryDef.rmTree(p)
 
   private def bellmanFordSql: String = {
     val rounds = (1 to BfRounds).map { k =>
@@ -79,50 +76,18 @@ object Extended11 {
     // replay/backfill configuration.
     QueryDef(
       "q151_stream_hourly",
-      (s, dir) => {
-        // file streams need a directory source: stage the fixture file
-        // (driver-side copy of ONE file — the real source is already a
-        // directory; this adapts the sandbox's single-file layout)
-        val src = java.nio.file.Files.createTempDirectory("graft_q151_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q151_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q151_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
-        val agg = Streaming.eventsFileStream(s, src.toString)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(
-            count(lit(1)).as("n"),
-            sum(R(col("value"), 4).cast(DecimalType(18, 4))).as("__vs"))
-        // stream runs at shuffle width 4: state-store fixed cost per
-        // partition per batch (see Streaming.withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = agg.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "complete") {
+          _.groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(
+              count(lit(1)).as("n"),
+              sum(R(col("value"), 4).cast(DecimalType(18, 4))).as("__vs"))
         }
-        // localCheckpoint(eager) materializes off the sink files so the
-        // scratch trio deletes NOW instead of leaking per invocation
-        s.read.parquet(out)
           .select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
             col("event_type"), col("n"),
             R(col("__vs").cast("double"), 4).as("value_sum_r"))
-          .orderBy("hour_start", "event_type")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(rmTree)
-      },
+          .orderBy("hour_start", "event_type"),
       Some(s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
               |  event_type, count(*) AS n,
               |  ${rs("CAST(sum(CAST(" + rs("value", 4) + " AS DECIMAL(18,4))) AS DOUBLE)", 4)}
@@ -143,46 +108,20 @@ object Extended11 {
     // emit the tail sessions; append+watermark is the production shape.
     QueryDef(
       "q152_stream_sessions",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q152_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q152_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q152_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
-        val agg = Streaming.eventsFileStream(s, src.toString)
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(R(col("value"), 4).cast(DecimalType(18, 4))).as("__vs"))
-        // stream runs at shuffle width 4 (see withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = agg.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "complete") {
+          _.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+            .agg(
+              count(lit(1)).as("n_events"),
+              sum(R(col("value"), 4).cast(DecimalType(18, 4))).as("__vs"))
         }
-        s.read.parquet(out)
           .select(
             col("user_id"),
             date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("start_s"),
             date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("end_s"),
             col("n_events"),
             R(col("__vs").cast("double"), 4).as("value_sum_r"))
-          .orderBy("user_id", "start_s")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(rmTree)
-      },
+          .orderBy("user_id", "start_s"),
       // µs-precision islands: epoch_us avoids the double rounding a
       // fractional epoch() would introduce at session boundaries
       Some(s"""WITH e AS (
@@ -410,63 +349,22 @@ object Extended11 {
     // enter state as exact 1e-4-unit longs, so accumulation is
     // order-free across rows, micro-batches, and restarts — the only
     // contract under which a stateful stream can HASH-MATCH a batch
-    // oracle. Each batch's updates append with their batch id; the
+    // oracle. Each batch's updates land with their batch id; the
     // read-back keeps the LATEST row per key, which is the final state
-    // regardless of how the replay happened to micro-batch. The prior
-    // state-store provider is restored afterwards so this entry leaves
-    // no session-level footprint on its battery neighbors.
+    // regardless of how the replay happened to micro-batch.
     QueryDef(
       "q156_stream_state_totals",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q156_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q156_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q156_ck").toString
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prior = s.conf.getOption(providerKey)
-        // outer try/finally spans streaming AND readout (localCheckpoint
-        // is eager) so a failed run cannot leak the temp dirs
-        try {
-        try {
-          val stream = Streaming.eventsFileStream(s, src.toString)
-            .select(col("user_id"),
-              (R(col("value"), 4).cast(DecimalType(18, 4)) * 10000).cast("long").as("units"))
-          // stream runs at shuffle width 4 — transformWithState opens a
-          // RocksDB instance per partition per batch, the priciest
-          // store-per-partition case (see withStreamShuffleWidth)
-          Streaming.withReplayWidth(s) {
-            val q = Streaming.runningUserTotalsExact(stream).toDF().writeStream
-              .outputMode("update")
-              .option("checkpointLocation", ckpt)
-              .trigger(Trigger.AvailableNow())
-              .foreachBatch { (b: DataFrame, id: Long) =>
-                b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-                ()
-              }
-              .start()
-            q.awaitTermination()
-          }
-        } finally prior match {
-          case Some(p) => s.conf.set(providerKey, p)
-          case None => s.conf.unset(providerKey)
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "update") { es =>
+          Streaming.runningUserTotalsExact(es.select(col("user_id"),
+            (R(col("value"), 4).cast(DecimalType(18, 4)) * 10000).cast("long").as("units")))
+            .toDF()
         }
-        val latest = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-        // localCheckpoint(eager) materializes the final state off the sink
-        // files so the scratch dirs can be deleted NOW instead of leaking
-        // one trio per invocation (verify + 2 bench reps = 9 dirs/round).
-        s.read.parquet(out)
-          .withColumn("__rn", row_number().over(latest))
-          .filter(col("__rn") === 1)
-          .select(col("user_id"), col("n_events"),
-            R(col("units").cast("double") / 10000.0, 4).as("value_sum_r"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(rmTree)
-      },
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("batch_id"), col("n_events"), col("units"))).as("last"))
+          .select(col("user_id"), col("last.n_events").as("n_events"),
+            R(col("last.units").cast("double") / 10000.0, 4).as("value_sum_r"))
+          .orderBy("user_id"),
       Some(s"""WITH u AS (
               |  SELECT user_id,
               |    CAST(CAST(${rs("value", 4)} AS DECIMAL(18,4)) * 10000 AS BIGINT) AS units

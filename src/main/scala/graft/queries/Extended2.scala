@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Corpus
 import graft.ops.{Num, Scale}
-import QueryDef.tbl
+import QueryDef.{moneySum, moneySumSql, tbl}
 
 /** Round-2 widening of the operator surface: the remaining join types
   * (full outer, cross, non-equi band join, salted skew join), generator /
@@ -19,14 +19,6 @@ object Extended2 {
 
   private def R(c: org.apache.spark.sql.Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-
-  /** Order-independent, cross-engine-exact money sum (same recipe as
-    * Joins.moneySum — round to 4, accumulate in DECIMAL(18,4)).
-    */
-  private def moneySum(c: org.apache.spark.sql.Column) =
-    sum(Num.roundTo(c, 4).cast(DecimalType(18, 4))).cast("double")
-  private def moneySumSql(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
 
   // DuckDB token relation mirroring Corpus.tokenRel (1000-element range
   // bound covers any fixture doc, same bound as TextQueries' shingle CTE)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.{Pack, Text}
 import graft.ops.{Num, Scale}
-import QueryDef.tbl
+import QueryDef.{moneySum, moneySumSql, registerViews, tbl}
 
 /** Round-2 additions beyond the §2 inventory (q74-q96): large-scale
   * training-pipeline operators — Bloom-prefiltered joins (runtime
@@ -25,26 +25,7 @@ object Extended3 {
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
 
-  /** Order-independent, cross-engine-exact money sum (same recipe as
-    * Joins.moneySum — round to 4, accumulate in DECIMAL(18,4)).
-    */
-  private def moneySum(c: Column) =
-    sum(Num.roundTo(c, 4).cast(org.apache.spark.sql.types.DecimalType(18, 4)))
-      .cast("double")
-  private def moneySumSql(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
-
-  private def registerViews(s: org.apache.spark.sql.SparkSession, dir: String,
-      tables: Seq[String]): Unit =
-    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
-
-  /** Order-independent revenue sum, valid verbatim in Spark SQL and
-    * DuckDB (same recipe as moneySum).
-    */
-  private val revSum = {
-    val rev = "l_extendedprice * (1 - l_discount)"
-    s"CAST(SUM(CAST(${Num.roundSql(rev, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
-  }
+  private val revSum = moneySumSql("l_extendedprice * (1 - l_discount)")
 
   private val sqlQ3 =
     s"""SELECT l_orderkey,

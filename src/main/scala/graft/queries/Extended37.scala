@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{moneySumSql, registerViews, tbl}
 
 /** Round-9 tenth batch: experiment-health guard (sample-ratio mismatch —
   * the FIRST check an A/B readout runs; a failed SRM invalidates
@@ -22,16 +22,7 @@ object Extended37 {
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
 
-  private def registerViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
-
-  /** Order-independent money sum usable verbatim in Spark SQL and DuckDB
-    * (Extended3's moneySum recipe).
-    */
-  private def moneySum(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
-
-  private val revSum = moneySum("l_extendedprice * (1 - l_discount)")
+  private val revSum = moneySumSql("l_extendedprice * (1 - l_discount)")
 
   /** Q7 shape: volume shipped between two fixed nations, both directions,
     * per ship year — the two-alias dimension join.
@@ -61,7 +52,7 @@ object Extended37 {
     * star join.
     */
   private val sqlQ8 = {
-    val natVol = moneySum(
+    val natVol = moneySumSql(
       "CASE WHEN n2_name = 'NATION_8' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")
     s"""SELECT o_year, $natVol AS nation_volume, $revSum AS total_volume,
        |  ${Num.roundSql(s"$natVol / $revSum", 6)} AS mkt_share_r
@@ -93,7 +84,7 @@ object Extended37 {
     val balAvg =
       s"CAST(SUM(CAST(${Num.roundSql("c_acctbal", 2)} AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)"
     s"""SELECT code, COUNT(*) AS numcust,
-       |  ${moneySum("c_acctbal")} AS totacctbal
+       |  ${moneySumSql("c_acctbal")} AS totacctbal
        |FROM (
        |  SELECT c_custkey % 10 AS code, c_acctbal
        |  FROM customer

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{moneySumSql, registerViews, tbl}
 
 /** Round-9 fourteenth batch: six more TPC-H plan shapes adapted to the
   * fixture schema (no partsupp / shipmode / commit-receipt dates in the
@@ -33,13 +32,7 @@ import QueryDef.tbl
   */
 object Extended41 {
 
-  private def registerViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
-
-  private def moneySum(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
-
-  private val revSum = moneySum("l_extendedprice * (1 - l_discount)")
+  private val revSum = moneySumSql("l_extendedprice * (1 - l_discount)")
 
   /** Q10: customers who returned items in 1996Q1, ranked by lost revenue.
     * Deterministic top-20: revenue is an exact DECIMAL-summed double and
@@ -80,7 +73,7 @@ object Extended41 {
     * unconditional denominator from ONE pass over the same join.
     */
   private val sqlQ14 = {
-    val promo = moneySum(
+    val promo = moneySumSql(
       "CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")
     s"""SELECT ${Num.roundSql(s"100.0 * $promo / $revSum", 6)} AS promo_share_r,
        |  $promo AS promo_revenue, $revSum AS total_revenue,

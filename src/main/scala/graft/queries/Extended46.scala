@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Streaming
 import graft.ops.Num
 import QueryDef.tbl
@@ -31,8 +30,6 @@ object Extended46 {
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
 
-  private def rmTree(p: java.nio.file.Path): Unit = QueryDef.rmTree(p)
-
   /** q272 ledger cap in cents (500.00). */
   private val Cap = 50000L
 
@@ -41,56 +38,26 @@ object Extended46 {
     // ----- q271: stream-stream interval join (real StreamingQuery) ------
     QueryDef(
       "q271_stream_join",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q271_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q271_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q271_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
-        val es = Streaming.eventsFileStream(s, src.toString)
-        val signups = es.filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts").as("s_ts"))
-          .withWatermark("s_ts", "2 hours")
-        val purchases = es.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "2 hours")
-        val joined = signups.join(purchases,
-          col("p_uid") === col("user_id") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
-        // stream runs at shuffle width 4: a stream-stream join opens 4
-        // state stores per partition per side per batch — at the session's
-        // 32 partitions that fixed cost dominated this query (r16 sweep:
-        // ~10-14 s; see Streaming.withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = joined
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "append") { es =>
+          val signups = es.filter(col("event_type") === "signup")
+            .select(col("user_id"), col("ts").as("s_ts"))
+            .withWatermark("s_ts", "2 hours")
+          val purchases = es.filter(col("event_type") === "purchase")
+            .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          signups.join(purchases,
+            col("p_uid") === col("user_id") &&
+              col("p_ts") >= col("s_ts") &&
+              col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
             .select(col("user_id"),
               unix_micros(col("s_ts")).as("st"), unix_micros(col("p_ts")).as("pt"))
-            .writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
         }
-        s.read.parquet(out)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_pairs"),
             min(expr("(pt - st) div 1000000")).as("min_lag_s"),
             max(expr("(pt - st) div 1000000")).as("max_lag_s"))
-          .orderBy("user_id")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(rmTree)
-      },
+          .orderBy("user_id"),
       Some("""WITH su AS (
              |  SELECT user_id, epoch_us(ts) AS st FROM events
              |  WHERE event_type = 'signup'),

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{moneySumSql, registerViews, tbl}
 
 /** Round-9 fifteenth batch: the EIGHT remaining TPC-H plan shapes, closing
   * the full 22-query suite (q88/89/98/99/100 + q249/250/251 + q257–q262
@@ -34,13 +33,7 @@ import QueryDef.tbl
   */
 object Extended49 {
 
-  private def registerViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
-
-  private def moneySum(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
-
-  private val revSum = moneySum("l_extendedprice * (1 - l_discount)")
+  private val revSum = moneySumSql("l_extendedprice * (1 - l_discount)")
 
   /** Q1: the pricing-summary report. Averages are exact-DECIMAL sums
     * divided by the group count (order-independent), then rounded — the
@@ -48,13 +41,13 @@ object Extended49 {
     */
   private val sqlQ1 =
     s"""SELECT l_returnflag, l_linestatus,
-       |  ${moneySum("l_quantity")} AS sum_qty,
-       |  ${moneySum("l_extendedprice")} AS sum_base_price,
+       |  ${moneySumSql("l_quantity")} AS sum_qty,
+       |  ${moneySumSql("l_extendedprice")} AS sum_base_price,
        |  $revSum AS sum_disc_price,
-       |  ${moneySum("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
-       |  ${Num.roundSql(s"${moneySum("l_quantity")} / COUNT(*)", 4)} AS avg_qty,
-       |  ${Num.roundSql(s"${moneySum("l_extendedprice")} / COUNT(*)", 4)} AS avg_price,
-       |  ${Num.roundSql(s"${moneySum("l_discount")} / COUNT(*)", 6)} AS avg_disc,
+       |  ${moneySumSql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
+       |  ${Num.roundSql(s"${moneySumSql("l_quantity")} / COUNT(*)", 4)} AS avg_qty,
+       |  ${Num.roundSql(s"${moneySumSql("l_extendedprice")} / COUNT(*)", 4)} AS avg_price,
+       |  ${Num.roundSql(s"${moneySumSql("l_discount")} / COUNT(*)", 6)} AS avg_disc,
        |  COUNT(*) AS count_order
        |FROM lineitem
        |WHERE l_shipdate <= DATE '2001-06-01'
@@ -96,7 +89,7 @@ object Extended49 {
     * pushed shipdate bound).
     */
   private val sqlQ6 =
-    s"""SELECT ${moneySum("l_extendedprice * l_discount")} AS revenue,
+    s"""SELECT ${moneySumSql("l_extendedprice * l_discount")} AS revenue,
        |  COUNT(*) AS n_rows
        |FROM lineitem
        |WHERE l_shipdate >= DATE '1996-01-01'
@@ -110,7 +103,7 @@ object Extended49 {
     */
   private val sqlQ9 =
     s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
-       |  ${moneySum("l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity")} AS profit
+       |  ${moneySumSql("l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity")} AS profit
        |FROM lineitem
        |JOIN part ON p_partkey = l_partkey
        |JOIN supplier ON s_suppkey = l_suppkey

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Streaming
 import graft.ops.Num
 import QueryDef.tbl
@@ -33,45 +32,14 @@ object Extended57 {
   val all: Seq[QueryDef] = Seq(
     QueryDef(
       "q303_stream_sliding",
-      (s, dir) => {
-        // file streams need a directory source (q151's staging pattern)
-        val src = java.nio.file.Files.createTempDirectory("graft_q303_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q303_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q303_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
-        val agg = Streaming.slidingCounts(
-          Streaming.eventsFileStream(s, src.toString),
-          window_ = "1 hour", slide = "15 minutes")
-        // stream runs at shuffle width 4 (see withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = agg.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "complete") {
+          Streaming.slidingCounts(_, window_ = "1 hour", slide = "15 minutes")
         }
-        // localCheckpoint(eager) materializes off the sink files so the
-        // scratch trio (incl. the events.parquet copy) deletes NOW
-        // instead of leaking one trio per verify/bench invocation
-        s.read.parquet(out)
           .select(
             date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
             col("event_type"), col("n"))
-          .orderBy("window_start", "event_type")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(QueryDef.rmTree)
-      },
+          .orderBy("window_start", "event_type"),
       Some("""WITH e AS (SELECT epoch_us(ts) AS us, event_type FROM events),
              |w AS (
              |  SELECT make_timestamp((us // 900000000) * 900000000

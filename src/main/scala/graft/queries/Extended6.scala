@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Text
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{registerViews, tbl}
 
 /** Round-5 batch 2: blocklist scrubbing (the C4 bad-word stage), vocabulary
   * coverage (the tokenizer-design aggregate), LATERAL and WITH RECURSIVE
@@ -17,9 +17,6 @@ object Extended6 {
 
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-
-  private def registerViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
-    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
 
   import TextQueries.wsSql
 

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Streaming
 import graft.ops.Num
 import QueryDef.tbl
@@ -39,42 +38,15 @@ object Extended60 {
   val all: Seq[QueryDef] = Seq(
     QueryDef(
       "q308_stream_dedup",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q308_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q308_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q308_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
-        val agg = Streaming.eventsFileStream(s, src.toString)
-          .select(col("user_id"), col("event_type"))
-          .dropDuplicates("user_id", "event_type")
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_distinct_users"))
-        // stream runs at shuffle width 4 — dedup + agg = two stateful
-        // operators' stores per partition (see withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = agg.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "complete") {
+          _.select(col("user_id"), col("event_type"))
+            .dropDuplicates("user_id", "event_type")
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n_distinct_users"))
         }
-        s.read.parquet(out)
           .select(col("event_type"), col("n_distinct_users"))
-          .orderBy("event_type")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(QueryDef.rmTree)
-      },
+          .orderBy("event_type"),
       Some("""SELECT event_type,
              |  count(DISTINCT user_id) AS n_distinct_users
              |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin)),

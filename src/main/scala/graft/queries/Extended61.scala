@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.{Similarity, Streaming, Text}
 import graft.ops.{Num, PrefixSum}
@@ -138,41 +137,16 @@ object Extended61 {
     QueryDef(
       "q311_stream_static_join",
       (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q311_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q311_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q311_ck").toString
-        // try/finally spans streaming AND readout (localCheckpoint is
-        // eager) so a failed run cannot leak the temp dirs
-        try {
         val dim = s.read.parquet(s"$dir/customer.parquet")
           .select(col("c_custkey"), col("c_mktsegment"))
-        val agg = Streaming.eventsFileStream(s, src.toString)
-          .join(broadcast(dim), col("user_id") === col("c_custkey"))
-          .groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("n_events"), sum(col("value")).as("value_sum"))
-        // stream runs at shuffle width 4 (see withStreamShuffleWidth)
-        Streaming.withReplayWidth(s) {
-          val q = agg.writeStream
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.mode("overwrite").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
+        Streaming.replay(s, s"$dir/events.parquet", "complete") {
+          _.join(broadcast(dim), col("user_id") === col("c_custkey"))
+            .groupBy(col("c_mktsegment"))
+            .agg(count(lit(1)).as("n_events"), sum(col("value")).as("value_sum"))
         }
-        s.read.parquet(out)
           .select(col("c_mktsegment"), col("n_events"),
             R(col("value_sum"), 4).as("value_sum_r"))
           .orderBy("c_mktsegment")
-          .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(QueryDef.rmTree)
       },
       Some(s"""SELECT c.c_mktsegment,
               |  count(*) AS n_events,

@@ -1,8 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Streaming
 
 /** Round-11 batch 3: q317 — LEFT OUTER stream-stream join. The join-mode
@@ -29,71 +27,32 @@ object Extended63 {
   val all: Seq[QueryDef] = Seq(
     QueryDef(
       "q317_stream_outer_join",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q317_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q317_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q317_ck").toString
-        // ONE try/finally spans streaming AND readout: a failed streaming
-        // phase must not leak the src/out/ckpt temp dirs either.
-        try {
-        Streaming.appendWatermarkSentinels(
-          s, s"$dir/events.parquet", src, -100L, "graft_q317_s", nSentinels = 2)
-        val es = Streaming.eventsFileStream(s, src.toString)
-        val signups = es.filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts").as("s_ts"), col("event_id").as("s_id"))
-          .withWatermark("s_ts", "2 hours")
-        val purchases = es.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "2 hours")
-        val joined = signups.join(purchases,
-          col("p_uid") === col("user_id") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"),
-          "left_outer")
-        // A stream-stream join opens 4 state stores per shuffle partition
-        // per side in EACH of the 3 replay batches — at local[32]'s 32
-        // partitions that fixed cost dominates (measured 14.5 s → 5.7 s
-        // at 4). The count is baked into this query's EPHEMERAL
-        // checkpoint at batch 0, so it is a per-run deploy knob: a
-        // production cluster sizes it to executors × cores like any
-        // stateful job; 4 fits a single-box 100k-row replay. Restore the
-        // session conf either way (the r10 buildBloom lesson: no conf
-        // ratchets).
-        Streaming.withReplayWidth(s) {
-          val q = joined
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "append", sentinelIdBase = Some(-100L)) { es =>
+          val signups = es.filter(col("event_type") === "signup")
+            .select(col("user_id"), col("ts").as("s_ts"), col("event_id").as("s_id"))
+            .withWatermark("s_ts", "2 hours")
+          val purchases = es.filter(col("event_type") === "purchase")
+            .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          signups.join(purchases,
+            col("p_uid") === col("user_id") &&
+              col("p_ts") >= col("s_ts") &&
+              col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"),
+            "left_outer")
             .select(col("user_id"), col("s_id"),
               unix_micros(col("s_ts")).as("st"), unix_micros(col("p_ts")).as("pt"))
-            .writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
         }
-        // localCheckpoint materializes eagerly, so cleanup in the finally
-        // is safe on success AND runs on failure (no leaked events copy)
-          s.read.parquet(out)
-            .filter(col("user_id") >= 0)
-            .groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).as("n_rows"),
-              countDistinct(col("s_id")).as("n_signups"),
-              count(col("pt")).as("n_matched"),
-              count(when(col("pt").isNull, lit(1))).as("n_abandoned"),
-              min(expr("(pt - st) div 1000000")).as("min_lag_s"),
-              max(expr("(pt - st) div 1000000")).as("max_lag_s"))
-            .orderBy("user_id")
-            .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(QueryDef.rmTree)
-      },
+          .filter(col("user_id") >= 0)
+          .groupBy(col("user_id"))
+          .agg(
+            count(lit(1)).as("n_rows"),
+            countDistinct(col("s_id")).as("n_signups"),
+            count(col("pt")).as("n_matched"),
+            count(when(col("pt").isNull, lit(1))).as("n_abandoned"),
+            min(expr("(pt - st) div 1000000")).as("min_lag_s"),
+            max(expr("(pt - st) div 1000000")).as("max_lag_s"))
+          .orderBy("user_id"),
       Some("""WITH su AS (
              |  SELECT user_id, event_id AS s_id, epoch_us(ts) AS st FROM events
              |  WHERE event_type = 'signup'),

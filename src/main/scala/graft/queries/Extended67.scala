@@ -1,8 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Streaming
 import graft.ops.Num
 
@@ -32,62 +30,31 @@ object Extended67 {
   val all: Seq[QueryDef] = Seq(
     QueryDef(
       "q322_stream_join_agg",
-      (s, dir) => {
-        val src = java.nio.file.Files.createTempDirectory("graft_q322_src")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          src.resolve("events.parquet"))
-        val out = java.nio.file.Files.createTempDirectory("graft_q322_out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_q322_ck").toString
-        // ONE try/finally spans streaming AND readout: a failed streaming
-        // phase must not leak the src/out/ckpt temp dirs either.
-        // nSentinels = 2 covers the CHAINED shape too (propagation is
-        // in-batch, not one-batch-per-operator) — pinned by
-        // StreamingSpec "sentinel-flush contract".
-        try {
-        Streaming.appendWatermarkSentinels(
-          s, s"$dir/events.parquet", src, -200L, "graft_q322_s", nSentinels = 2)
-        val es = Streaming.eventsFileStream(s, src.toString)
-        val signups = es.filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts").as("s_ts"))
-          .withWatermark("s_ts", "2 hours")
-        val purchases = es.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value").as("p_value"))
-          .withWatermark("p_ts", "2 hours")
-        val joined = signups.join(purchases,
-          col("p_uid") === col("user_id") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
-        // second stateful operator IN THE SAME QUERY: tumbling window on
-        // the joined stream's purchase event time
-        val agg = joined
-          .groupBy(window(col("p_ts"), "1 hour").as("w"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(col("p_value")).as("v"))
-        Streaming.withReplayWidth(s) {
-          val q = agg
+      (s, dir) =>
+        Streaming.replay(s, s"$dir/events.parquet", "append", sentinelIdBase = Some(-200L)) { es =>
+          val signups = es.filter(col("event_type") === "signup")
+            .select(col("user_id"), col("ts").as("s_ts"))
+            .withWatermark("s_ts", "2 hours")
+          val purchases = es.filter(col("event_type") === "purchase")
+            .select(col("user_id").as("p_uid"), col("ts").as("p_ts"), col("value").as("p_value"))
+            .withWatermark("p_ts", "2 hours")
+          val joined = signups.join(purchases,
+            col("p_uid") === col("user_id") &&
+              col("p_ts") >= col("s_ts") &&
+              col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
+          // second stateful operator IN THE SAME QUERY: tumbling window on
+          // the joined stream's purchase event time
+          joined
+            .groupBy(window(col("p_ts"), "1 hour").as("w"))
+            .agg(count(lit(1)).as("n_pairs"),
+              sum(col("p_value")).as("v"))
             .select(unix_micros(col("w.start")).as("wstart_us"),
               col("n_pairs"), col("v"))
-            .writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              b.write.mode("append").parquet(out)
-              ()
-            }
-            .start()
-          q.awaitTermination()
         }
-          s.read.parquet(out)
-            .filter(col("wstart_us") < Streaming.SentinelEpochUs)
-            .withColumn("hr", (col("wstart_us") / lit(3600000000L)).cast("long"))
-            .select(col("hr"), col("n_pairs"), Num.roundTo(col("v"), 4).as("value_sum_r"))
-            .orderBy("hr")
-            .localCheckpoint(true)
-        } finally Seq(src, java.nio.file.Paths.get(out), java.nio.file.Paths.get(ckpt))
-          .foreach(QueryDef.rmTree)
-      },
+          .filter(col("wstart_us") < Streaming.SentinelEpochUs)
+          .withColumn("hr", (col("wstart_us") / lit(3600000000L)).cast("long"))
+          .select(col("hr"), col("n_pairs"), Num.roundTo(col("v"), 4).as("value_sum_r"))
+          .orderBy("hr"),
       Some(s"""WITH su AS (
               |  SELECT user_id, epoch_us(ts) AS st FROM events
               |  WHERE event_type = 'signup'),

@@ -1,9 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{moneySum, moneySumSql, tbl}
 
 /** Join battery (SURVEY.md §2.4 — the reference has zero joins; these are
   * the target-spec operators over the TPC-H-ish fixtures): inner multi-way
@@ -18,12 +17,6 @@ import QueryDef.tbl
   * DuckDB exactly); the driver-visible value is cast back to double.
   */
 object Joins {
-
-  /** sum of money expr, order-independent and cross-engine-exact. */
-  private def moneySum(c: org.apache.spark.sql.Column) =
-    sum(Num.roundTo(c, 4).cast(DecimalType(18, 4))).cast("double")
-  private def moneySumSql(e: String) =
-    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
 
   val all: Seq[QueryDef] = Seq(
     // Inner 4-way join, revenue per nation; nation broadcast.

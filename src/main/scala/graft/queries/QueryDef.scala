@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.types.DecimalType
+import graft.ops.Num
 
 /** One driver-visible query: a Spark plan over the fixture tables plus an
   * equivalent ANSI/DuckDB SQL oracle (None for ops whose results depend on
@@ -22,6 +25,23 @@ final case class QueryDef(
 object QueryDef {
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
+
+  /** Registers each fixture table as a temp view of its own name, for the
+    * queries written as one SQL text shared with the oracle.
+    */
+  def registerViews(s: SparkSession, dir: String, tables: Seq[String]): Unit =
+    tables.foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
+
+  /** Order-independent, cross-engine-exact money sum: round to 4 places,
+    * accumulate in DECIMAL(18,4), read back as double — identical under
+    * any partitioning or merge order, and equal to DuckDB's.
+    */
+  def moneySum(c: Column): Column =
+    sum(Num.roundTo(c, 4).cast(DecimalType(18, 4))).cast("double")
+
+  /** [[moneySum]] as SQL text, valid verbatim in Spark SQL and DuckDB. */
+  def moneySumSql(e: String): String =
+    s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
 
   /** Best-effort recursive delete for streaming queries' per-invocation
     * scratch dirs (stream source copy, sink, checkpoint) — they are

@@ -71,10 +71,16 @@ class StreamingSpec extends SparkSuite {
     assert(out == Set((7L, 0L, 2L), (7L, 1L, 1L), (8L, 0L, 1L)))
   }
 
+  /** Excludes the windows of the replay's watermark sentinels. */
+  private val realWindows = col("window_start") < timestamp_micros(lit(Streaming.SentinelEpochUs))
+
   test("file-source stream: tumbling window counts via Trigger.AvailableNow") {
-    val stream = Streaming.eventsFileStream(spark, eventsDir)
-    val agg = Streaming.tumblingCounts(stream, "1 hour", "2 hours")
-    val result = Streaming.runAvailableNow(agg, "tumbling_test")
+    // the replay runs no no-data batch, so append-mode windows flush
+    // through the watermark sentinels
+    val result = Streaming.replay(
+        spark, s"$sf0001/events.parquet", "append", sentinelIdBase = Some(-300L)) {
+      Streaming.tumblingCounts(_, "1 hour", "2 hours")
+    }.filter(realWindows)
     // compare against the identical batch plan
     val expected = graft.Tables.load(spark, sf0001, "events")
       .groupBy(window($"ts", "1 hour"), $"event_type")
@@ -94,7 +100,7 @@ class StreamingSpec extends SparkSuite {
       (2L, ts("2024-01-01 10:01:00"), 2.0))
     val deduped = Streaming.dedupWithinWatermark(
       mem.toDF().toDF("event_id", "ts", "value"), "1 hour")
-    val out = Streaming.runAvailableNow(deduped, "dedup_test")
+    val out = Streaming.land(spark, "append")(deduped)
     assert(out.select("event_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
@@ -115,7 +121,7 @@ class StreamingSpec extends SparkSuite {
         .withColumn("value", lit(0.0)).withColumn("props", lit("{}")),
       purchases.toDF().toDF("user_id", "ts", "event_id", "value")
         .withColumn("props", lit("{}")))
-    val out = Streaming.runAvailableNow(joined, "ss_join_test")
+    val out = Streaming.land(spark, "append")(joined)
     val rows = out.collect().map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("p_id")))
     assert(rows.toSet == Set((1L, 100L)))
   }
@@ -158,7 +164,7 @@ class StreamingSpec extends SparkSuite {
       .withColumn("tier", when(pmod($"user_id", lit(2)) === 0, "even").otherwise("odd"))
     val enriched = stream.join(dim, "user_id")
       .groupBy($"tier").agg(count(lit(1)).as("n"))
-    val result = Streaming.runAvailableNow(enriched, "stream_static_test", "complete")
+    val result = Streaming.land(spark, "complete")(enriched)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = graft.Tables.load(spark, sf0001, "events")
       .withColumn("tier", when(pmod($"user_id", lit(2)) === 0, "even").otherwise("odd"))
@@ -168,15 +174,24 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("foreachBatch sink lands every row exactly once, keyed by batch id") {
-    val out = java.nio.file.Files.createTempDirectory("graft_febatch").toString + "/sink"
-    val stream = Streaming.eventsFileStream(spark, eventsDir)
-    Streaming.runForeachBatchParquet(stream, out, "febatch_test")
-    val landed = spark.read.parquet(out)
+    val landed = Streaming.land(spark, "append")(Streaming.eventsFileStream(spark, eventsDir))
     val src = graft.Tables.load(spark, sf0001, "events")
     assert(landed.count() == src.count())
     assert(landed.select("event_id").distinct().count() ==
       src.select("event_id").distinct().count())
     assert(landed.select("batch_id").distinct().count() >= 1)
+    // a retried batch (its id landed twice) replaces its own partition
+    // and leaves the other batches' partitions alone
+    val sink = java.nio.file.Files.createTempDirectory("graft_febatch")
+    try {
+      val batch = src.filter(col("event_id") % 100 === 0)
+      val n = batch.count()
+      assert(n > 0)
+      for (id <- Seq(7L, 7L, 8L)) Streaming.landing(sink.toString, "append")(batch, id)
+      val relanded = spark.read.parquet(sink.toString)
+      assert(relanded.filter(col("batch_id") === 7L).count() == n)
+      assert(relanded.count() == 2 * n)
+    } finally graft.queries.QueryDef.rmTree(sink)
   }
 
   test("mapGroupsWithState: running per-user totals accumulate across micro-batches") {
@@ -318,8 +333,6 @@ class StreamingSpec extends SparkSuite {
     val expected = Set(earlyUs, tailUs)
     def runChained(n: Int): Set[Long] = {
       val src = java.nio.file.Files.createTempDirectory(s"graft_sentspec${n}_src")
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_sentspec${n}_ck").toString
-      val outDir = java.nio.file.Files.createTempDirectory(s"graft_sentspec${n}_out").toString
       try {
         val scratch = java.nio.file.Files.createTempDirectory(s"graft_sentspec${n}_w")
         fixture.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -328,44 +341,29 @@ class StreamingSpec extends SparkSuite {
         java.nio.file.Files.move(part.toPath, src.resolve("events.parquet"))
         graft.queries.QueryDef.rmTree(scratch)
         Streaming.appendWatermarkSentinels(
-          spark, src.resolve("events.parquet").toString, src, -900L,
-          s"graft_sentspec${n}_s", nSentinels = n)
-        val es = Streaming.eventsFileStream(spark, src.toString)
-        val signups = es.filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts").as("s_ts"))
-          .withWatermark("s_ts", "2 hours")
-        val purchases = es.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "2 hours")
-        val agg = signups.join(purchases,
-          col("p_uid") === col("user_id") &&
-            col("p_ts") >= col("s_ts") &&
-            col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
-          .groupBy(window(col("p_ts"), "1 hour").as("w"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .select(unix_micros(col("w.start")).as("wstart_us"), col("n_pairs"))
-        val q = agg.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        spark.read.parquet(outDir)
+          spark, src.resolve("events.parquet").toString, src, -900L, nSentinels = n)
+        // land runs the query with no-data micro-batches OFF
+        Streaming.land(spark, "append") {
+          val es = Streaming.eventsFileStream(spark, src.toString)
+          val signups = es.filter(col("event_type") === "signup")
+            .select(col("user_id"), col("ts").as("s_ts"))
+            .withWatermark("s_ts", "2 hours")
+          val purchases = es.filter(col("event_type") === "purchase")
+            .select(col("user_id").as("p_uid"), col("ts").as("p_ts"))
+            .withWatermark("p_ts", "2 hours")
+          signups.join(purchases,
+            col("p_uid") === col("user_id") &&
+              col("p_ts") >= col("s_ts") &&
+              col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
+            .groupBy(window(col("p_ts"), "1 hour").as("w"))
+            .agg(count(lit(1)).as("n_pairs"))
+            .select(unix_micros(col("w.start")).as("wstart_us"), col("n_pairs"))
+        }
           .filter(col("wstart_us") < Streaming.SentinelEpochUs)
           .collect().map(_.getLong(0)).toSet
-      } finally Seq(src, java.nio.file.Paths.get(ckpt), java.nio.file.Paths.get(outDir))
-        .foreach(graft.queries.QueryDef.rmTree)
+      } finally graft.queries.QueryDef.rmTree(src)
     }
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prior = spark.conf.get(noDataKey)
-    val (one, two) = try {
-      spark.conf.set(noDataKey, "false")
-      (runChained(1), runChained(2))
-    } finally spark.conf.set(noDataKey, prior)
+    val (one, two) = (runChained(1), runChained(2))
     assert(two == expected,
       s"2 sentinels must flush every real window: missing ${expected -- two}")
     // 1 sentinel: the batch it rides in still evicts under the PREVIOUS
@@ -375,9 +373,10 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("session_window streaming agg matches gaps-and-islands session count") {
-    val stream = Streaming.eventsFileStream(spark, eventsDir)
-    val sess = Streaming.sessionAgg(stream, "30 minutes", "10 minutes")
-    val streamed = Streaming.runAvailableNow(sess, "session_test")
+    val streamed = Streaming.replay(
+        spark, s"$sf0001/events.parquet", "append", sentinelIdBase = Some(-500L)) {
+      Streaming.sessionAgg(_, "30 minutes", "10 minutes")
+    }.filter(col("user_id") >= 0)
     val batchSessions = Sessions.assign(
       graft.Tables.load(spark, sf0001, "events"), "user_id", "ts", 1800, Seq($"event_id"))
       .select("user_id", "session_id").distinct().count()
@@ -385,5 +384,30 @@ class StreamingSpec extends SparkSuite {
     // closes all but the per-user tails
     val n = streamed.count()
     assert(n > 0 && n <= batchSessions)
+  }
+
+  test("replay leaves no driver temp dir and no replay conf behind, also when the query fails mid-stream") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def driverDirs() = tmp.listFiles().map(_.getName)
+      .filter(_.startsWith(Streaming.TmpPrefix)).toSet
+    val confKeys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    def confs() = confKeys.map(spark.conf.getOption)
+    val (dirsBefore, confsBefore) = (driverDirs(), confs())
+    def run(value: org.apache.spark.sql.Column) =
+      Streaming.replay(spark, s"$sf0001/events.parquet", "append", sentinelIdBase = Some(-600L)) {
+        _.select(col("event_id"), value.as("v"))
+      }
+    assert(run(col("value")).count() > 0)
+    assert(driverDirs() -- dirsBefore == Set.empty)
+    assert(confs() == confsBefore)
+    // the real-data batch lands; the first sentinel batch then throws
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(when(col("user_id") < 0, raise_error(lit("sentinel boom"))).otherwise(col("value")))
+    }
+    assert(e.getMessage.contains("sentinel boom"), e.getMessage)
+    assert(driverDirs() -- dirsBefore == Set.empty)
+    assert(confs() == confsBefore)
   }
 }

@@ -202,30 +202,18 @@ class Extended11Spec extends SparkSuite {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$sf0001/events.parquet").repartition(3)
       .write.mode("overwrite").parquet(srcDir)
-    val out = java.nio.file.Files.createTempDirectory("q156_multi_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("q156_multi_ck").toString
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prior = spark.conf.getOption(providerKey)
-    try {
-      val stream = graft.ext.Streaming.eventsFileStream(spark, srcDir, maxFilesPerTrigger = 1)
+    val landed = graft.ext.Streaming.land(spark, "update") {
+      val stream = graft.ext.Streaming.eventsFileStream(spark, srcDir)
         .select($"user_id",
           (graft.ops.Num.roundTo($"value", 4).cast(DecimalType(18, 4)) * 10000)
             .cast("long").as("units"))
-      val q = graft.ext.Streaming.runningUserTotalsExact(stream).toDF().writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          b.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    } finally prior match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
+      graft.ext.Streaming.runningUserTotalsExact(stream).toDF()
     }
-    val landed = spark.read.parquet(out)
+    graft.queries.QueryDef.rmTree(java.nio.file.Paths.get(srcDir))
+    assert(spark.conf.getOption(providerKey) == prior,
+      "the driver restores the state-store provider the plan set")
     assert(landed.select("batch_id").distinct().count() >= 3,
       "replay must actually micro-batch (one file per trigger)")
     val latest = org.apache.spark.sql.expressions.Window
