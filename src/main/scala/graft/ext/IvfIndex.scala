@@ -1,9 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, DecimalType}
+import org.apache.spark.sql.types.IntegerType
 
 import Similarity.{normalizedRel, assignToCells, centroidsOf, dot, toDouble}
 
@@ -29,6 +28,10 @@ import Similarity.{normalizedRel, assignToCells, centroidsOf, dot, toDouble}
   *     serve-time lookup tables, nCodewords rows, broadcast. A
   *     `_PQ_RESIDUAL` flag file inside it marks a residual-space codebook
   *     ([[buildResidual]]), so the flag is published with the codebook.
+  *     The layout is data, not code: one writer produces either layout,
+  *     and [[refresh]], [[rebuild]] and the one ADC serve
+  *     ([[servePqTopK]]) read the flag ([[isResidual]]) to pick the code
+  *     space.
   *   - `pairs/` (optional, [[buildPairs]]): (a_id, b_id) with the baked
   *     threshold in a `_THRESHOLD` file inside it.
   *
@@ -65,52 +68,8 @@ object IvfIndex {
       nSub: Int, subDim: Int, codeStride: Long, outDir: String,
       cbTrainOn: Option[DataFrame] = None): Unit =
     commit(corpus.sparkSession, outDir, Publish.Replace, BuildComponents)(stage =>
-      writeRaw(corpus, idCol, embCol, stride, trainIters, trainOn, nSub, subDim, codeStride,
-        cbTrainOn, stage))()
-
-  /** [[build]]'s components, written under `outDir`. */
-  private def writeRaw(
-      corpus: DataFrame, idCol: String, embCol: String,
-      stride: Int, trainIters: Int, trainOn: Option[DataFrame],
-      nSub: Int, subDim: Int, codeStride: Long, cbTrainOn: Option[DataFrame],
-      outDir: String): Unit = {
-    val spark = corpus.sparkSession
-    centroidsOf(corpus, idCol, embCol, stride, trainIters, trainOn)
-      .write.parquet(s"$outDir/centroids")
-    // assignment reads the PERSISTED centroids back (cheaper than
-    // recomputing the training subplan inside this job, and exactly what
-    // a production build resuming from a trained quantizer does)
-    val cent = spark.read.parquet(s"$outDir/centroids")
-    val c = normalizedRel(corpus, idCol, embCol, "cid", "ce")
-    // the codebook is persisted FIRST and the encode reads it back, so
-    // the inverted lists' codes always live in the persisted codebook's
-    // space — trained or strided, the same resume-from-artifact posture
-    // as the centroid read above
-    val seedCb = corpus.filter(pmod(col(idCol), lit(codeStride)) === 0)
-      .select(col(idCol).as("code_id"), toDouble(col(embCol)).as("cbe"))
-    cbTrainOn
-      .map(t => Similarity.trainSubCodebooks(
-        t.select(col(idCol).as("vid"), toDouble(col(embCol)).as("ve")),
-        seedCb, nSub, subDim))
-      .getOrElse(seedCb)
-      .write.parquet(s"$outDir/codebook")
-    val codes = Similarity.pqEncodeAgainst(
-      corpus.select(col(idCol).as("vid"), toDouble(col(embCol)).as("ve")),
-      spark.read.parquet(s"$outDir/codebook").select(col("code_id"), col("cbe").as("ce")),
-      nSub, subDim)
-      .drop("recon")
-    // Repartition by the PARTITION column before the partitioned write:
-    // the join output is hash-distributed by cid, so without this every
-    // task holds rows of most cells and writes a file into every cell
-    // directory — ~tasks×cells small files (13.5k at sf10; measured as
-    // the dominant cost of whole-invfile consumers — q327's pair scan,
-    // cellStats' listing). One shuffle at build time buys one file per
-    // cell, the layout compact() restores after refreshes.
-    assignToCells(c, cent)
-      .join(codes, col("cid") === col("vid")).drop("vid")
-      .repartition(col("cent_id"))
-      .write.partitionBy("cent_id").parquet(s"$outDir/invfile")
-  }
+      writeIndex(corpus, idCol, embCol, stride, trainIters, trainOn, nSub, subDim, codeStride,
+        residual = false, cbTrainOn, stage))()
 
   /** [[build]]'s RESIDUAL-PQ variant — the full IVFADC recipe (Jégou et
     * al. 2011 §IV: "the residual is quantized"): codes encode
@@ -126,8 +85,8 @@ object IvfIndex {
     * the pre-rerank recall it buys.
     *
     * On-disk layout is [[build]]'s plus the `codebook/_PQ_RESIDUAL` flag
-    * (the codebook lives in residual space — a serve must add the cell
-    * centroid's contribution back, [[servePqResidualTopK]]); the
+    * (the codebook lives in residual space, so [[servePqTopK]] adds the
+    * cell centroid's contribution back when it reads the flag); the
     * inverted lists and centroids are byte-compatible, so IVF-Flat serve
     * ([[serveTopK]]) works unchanged on either layout.
     *
@@ -140,41 +99,82 @@ object IvfIndex {
       stride: Int, trainIters: Int, trainOn: Option[DataFrame],
       nSub: Int, subDim: Int, codeStride: Long, outDir: String): Unit =
     commit(corpus.sparkSession, outDir, Publish.Replace, BuildComponents)(stage =>
-      writeResidual(corpus, idCol, embCol, stride, trainIters, trainOn, nSub, subDim, codeStride,
-        stage))()
+      writeIndex(corpus, idCol, embCol, stride, trainIters, trainOn, nSub, subDim, codeStride,
+        residual = true, cbTrainOn = None, stage))()
 
-  /** [[buildResidual]]'s components, written under `outDir`. */
-  private def writeResidual(
+  /** The components of a [[build]] (`residual = false`) or a
+    * [[buildResidual]] (`residual = true`), written under `outDir`.
+    */
+  private def writeIndex(
       corpus: DataFrame, idCol: String, embCol: String,
       stride: Int, trainIters: Int, trainOn: Option[DataFrame],
-      nSub: Int, subDim: Int, codeStride: Long, outDir: String): Unit = {
+      nSub: Int, subDim: Int, codeStride: Long, residual: Boolean,
+      cbTrainOn: Option[DataFrame], outDir: String): Unit = {
     val spark = corpus.sparkSession
     centroidsOf(corpus, idCol, embCol, stride, trainIters, trainOn)
       .write.parquet(s"$outDir/centroids")
+    // assignment reads the PERSISTED centroids back (cheaper than
+    // recomputing the training subplan inside this job, and exactly what
+    // a production build resuming from a trained quantizer does)
     val cent = spark.read.parquet(s"$outDir/centroids")
-    val c = normalizedRel(corpus, idCol, embCol, "cid", "ce")
-    val assigned = graft.ops.Ckpt(
-      assignToCells(c, cent)
-        .join(broadcast(cent.select(col("cent_id"), col("cent_e"))), "cent_id")
-        .withColumn("res", zip_with(col("ce"), col("cent_e"), (a, b) => a - b))
-        .drop("cent_e"))
-    // the seed codebook is the strided sample's RESIDUALS — same stride
-    // rule as build's, same oracle-replayable determinism, but the
-    // codewords live in the residual space the codes quantize
-    assigned.filter(pmod(col("cid"), lit(codeStride)) === 0)
-      .select(col("cid").as("code_id"), col("res").as("cbe"))
+    val (assigned, vecs) = encodeInput(
+      normalizedRel(corpus, idCol, embCol, "cid", "ce"), cent, residual, checkpoint = false)
+    // the seed codebook is the strided sample of the vectors the codes
+    // quantize — same stride rule for both layouts, same oracle-replayable
+    // determinism. The codebook is persisted FIRST and the encode reads it
+    // back, so the inverted lists' codes always live in the persisted
+    // codebook's space — trained or strided, the same resume-from-artifact
+    // posture as the centroid read above
+    val seedCb = vecs.filter(pmod(col("vid"), lit(codeStride)) === 0)
+      .select(col("vid").as("code_id"), col("ve").as("cbe"))
+    cbTrainOn
+      .map(t => Similarity.trainSubCodebooks(
+        t.select(col(idCol).as("vid"), toDouble(col(embCol)).as("ve")),
+        seedCb, nSub, subDim))
+      .getOrElse(seedCb)
       .write.parquet(s"$outDir/codebook")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/codebook/$ResidualFlag"), "1".getBytes("UTF-8"))
+    if (residual)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$outDir/codebook/$ResidualFlag"), "1".getBytes("UTF-8"))
     val codes = Similarity.pqEncodeAgainst(
-      assigned.select(col("cid").as("vid"), col("res").as("ve")),
-      spark.read.parquet(s"$outDir/codebook").select(col("code_id"), col("cbe").as("ce")),
+      vecs, spark.read.parquet(s"$outDir/codebook").select(col("code_id"), col("cbe").as("ce")),
       nSub, subDim)
       .drop("recon")
-    assigned.drop("res")
+    // Repartition by the PARTITION column before the partitioned write:
+    // the join output is hash-distributed by cid, so without this every
+    // task holds rows of most cells and writes a file into every cell
+    // directory — ~tasks×cells small files (13.5k at sf10; measured as
+    // the dominant cost of whole-invfile consumers — q327's pair scan,
+    // cellStats' listing). One shuffle at build time buys one file per
+    // cell, the layout compact() restores after refreshes.
+    assigned
       .join(codes, col("cid") === col("vid")).drop("vid")
       .repartition(col("cent_id"))
       .write.partitionBy("cent_id").parquet(s"$outDir/invfile")
+  }
+
+  /** `c` (cid, ce, ce_n) assigned to its cells of `cent` — (cid, ce, ce_n,
+    * cent_id) — and the (vid, ve) vectors the layout's codes quantize:
+    * `ce` itself for raw codes, which therefore never wait on the
+    * assignment; `ce − cent_e` of its assigned cell for residual codes.
+    * A residual assignment is checkpointed with its residuals, so the
+    * N×√N pass runs once for both consumers; `checkpoint` forces that for
+    * a raw assignment read more than once.
+    */
+  private def encodeInput(
+      c: DataFrame, cent: DataFrame, residual: Boolean,
+      checkpoint: Boolean): (DataFrame, DataFrame) = {
+    val assigned = assignToCells(c, cent)
+    if (residual) {
+      val withRes = graft.ops.Ckpt(
+        assigned
+          .join(broadcast(cent.select(col("cent_id"), col("cent_e"))), "cent_id")
+          .withColumn("ve", zip_with(col("ce"), col("cent_e"), (a, b) => a - b))
+          .drop("cent_e"))
+      (withRes.drop("ve"), withRes.select(col("cid").as("vid"), col("ve")))
+    } else
+      (if (checkpoint) graft.ops.Ckpt(assigned) else assigned,
+        c.select(col("cid").as("vid"), col("ce").as("ve")))
   }
 
   /** The flag file inside `codebook/` that marks residual-space codes. */
@@ -183,75 +183,15 @@ object IvfIndex {
   /** Whether `indexDir` was written by [[buildResidual]] — its codebook
     * and codes live in residual space. The `codebook/_PQ_RESIDUAL` flag,
     * published with the codebook it describes, is the contract every
-    * lifecycle operation keys on: serve picks the ADC
-    * decomposition ([[servePqResidualTopK]] vs [[servePqTopK]], each
-    * refusing the other's layout), [[refresh]] picks the encode space for
-    * delta codes, [[rebuild]] picks the staging builder. Centroids,
-    * inverted lists, and the inline vectors are byte-compatible either
-    * way, so the IVF-Flat and SemDeDup paths never consult it.
+    * lifecycle operation keys on: [[servePqTopK]] adds the centroid term
+    * of the ADC decomposition, [[refresh]] encodes delta residuals,
+    * [[rebuild]] stages the same layout. Centroids, inverted lists, and
+    * the inline vectors are byte-compatible either way, so the IVF-Flat
+    * and SemDeDup paths never consult it.
     */
   def isResidual(indexDir: String): Boolean =
     java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$indexDir/codebook/$ResidualFlag"))
-
-  /** IVF+PQ ADC serve against a RESIDUAL-coded index ([[buildResidual]]):
-    * the candidate's approximate dot decomposes as
-    * `dot(q, x̂) = dot(q, centroid(cell)) + dot(q, residual-codeword)` —
-    * the first term is one bounded probe-pair computation (≤ maxProbePairs
-    * rows against the broadcast √N centroid table), the second is the
-    * same nSub LUT lookups as [[servePqTopK]], summed in DECIMAL. Rerank
-    * stays exact-cosine over the shortlist's inline vectors. Refuses a
-    * non-residual index (the codebook's flag is the contract).
-    */
-  def servePqResidualTopK(
-      spark: SparkSession, indexDir: String, queries: DataFrame,
-      idCol: String, embCol: String, k: Int, nSub: Int, subDim: Int,
-      nProbe: Int, maxProbePairs: Int = 1000000): DataFrame = {
-    Publish.recover(spark, indexDir)
-    require(isResidual(indexDir),
-      s"$indexDir was not built by buildResidual — its codes live in raw-vector " +
-        "space; use servePqTopK")
-    val (probes, cells) = collectedProbes(
-      spark, indexDir, queries, idCol, embCol, nProbe, maxProbePairs)
-    val inv = prunedInvfile(spark, indexDir, cells)
-    val q = normalizedRel(queries, idCol, embCol, "qid", "qe")
-    val cb = spark.read.parquet(s"$indexDir/codebook")
-    val cent = spark.read.parquet(s"$indexDir/centroids")
-    val off = (col("s") * subDim + 1).cast("int")
-    val lut = q.select(col("qid"), col("qe"))
-      .withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
-      .crossJoin(broadcast(cb))
-      .select(col("qid"), col("s"), col("code_id"),
-        dot(slice(col("qe"), off, lit(subDim)), slice(col("cbe"), off, lit(subDim))).as("v"))
-    // dot(q, centroid) per probed (qid, cent_id) — bounded by the probe
-    // pair list; computed fresh (not un-normalized from the probe cosine:
-    // a multiply-back would be a different IEEE op than never dividing)
-    val centDot = broadcast(probes)
-      .join(q.select(col("qid"), col("qe")), "qid")
-      .join(broadcast(cent.select(col("cent_id"), col("cent_e"))), "cent_id")
-      .select(col("qid"), col("cent_id"), dot(col("qe"), col("cent_e")).as("cdot"))
-    val candCodes = broadcast(probes)
-      .join(inv, "cent_id")
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"), col("cent_id"),
-        explode(array((0 until nSub).map(i =>
-          struct(lit(i).as("s"), col(s"code_$i").as("code_id"))): _*)).as("sc"))
-      .select(col("qid"), col("cid"), col("cent_id"),
-        col("sc.s").as("s"), col("sc.code_id").as("code_id"))
-    val adc = candCodes.join(broadcast(lut), Seq("qid", "s", "code_id"))
-      .groupBy(col("qid"), col("cid"), col("cent_id"))
-      .agg(sum(col("v").cast(DecimalType(38, 18))).cast("double").as("radc"))
-      .join(broadcast(centDot), Seq("qid", "cent_id"))
-      .select(col("qid"), col("cid"), (col("radc") + col("cdot")).as("adc"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid").asc)
-    val top = adc.withColumn("rn", row_number().over(wTop).cast("bigint"))
-      .filter(col("rn") <= k)
-    broadcast(top)
-      .join(inv.select(col("cid"), col("ce"), col("ce_n")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"), col("rn"), col("adc"),
-        (dot(col("qe"), col("ce")) / (col("qe_n") * col("ce_n"))).as("cos"))
-  }
 
   /** Incremental index refresh — the operation a growing corpus runs per
     * ingest batch, completing the lifecycle (build once / refresh per
@@ -311,18 +251,22 @@ object IvfIndex {
           "maintaining it at a different threshold would mix pair sets; " +
           "rebuild the artifact (buildPairs) at the new threshold instead")
     }
-    val residual = isResidual(indexDir)
     val cent = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
       .select(col("code_id"), col("cbe").as("ce"))
-    val d = normalizedRel(delta, idCol, embCol, "cid", "ce")
-    val assignedRaw = assignToCells(d, cent)
-    // pair maintenance reads the assignment twice (pairs + append), and
-    // the residual encode reads it once more (codes need cent_id):
-    // checkpoint so the ΔN×√N assignment scan runs once
-    val assigned =
-      if (pairThreshold.isDefined || residual) graft.ops.Ckpt(assignedRaw)
-      else assignedRaw
+    // Delta codes must live in the space the PERSISTED codebook
+    // quantizes: raw vectors for a [[build]] index, x − centroid(cell(x))
+    // for a [[buildResidual]] one ([[isResidual]] — the codebook's flag
+    // is the contract). Encoding the delta raw against a residual-space
+    // codebook would append codes that decode as garbage ADC scores with
+    // no error anywhere — the exact-rerank vectors (`ce`) are unaffected,
+    // which is precisely what would keep it silent. q338 hash-gates the
+    // residual form (its oracle forms every corpus vector's residual,
+    // delta included). Pair maintenance reads the assignment twice (pairs
+    // + append): checkpoint so the ΔN×√N assignment scan runs once.
+    val (assigned, toEncode) = encodeInput(
+      normalizedRel(delta, idCol, embCol, "cid", "ce"), cent, isResidual(indexDir),
+      checkpoint = pairThreshold.isDefined)
     val components = pairThreshold.map(_ => "pairs").toSeq :+ "invfile"
     commit(spark, indexDir, Publish.Append, components) { stage =>
       pairThreshold.foreach { th =>
@@ -362,22 +306,6 @@ object IvfIndex {
         dOld.union(dNew).filter(col("cos") >= th).select(col("a_id"), col("b_id"))
           .write.parquet(s"$stage/pairs")
       }
-      // Delta codes must live in the space the PERSISTED codebook
-      // quantizes: raw vectors for a [[build]] index, x − centroid(cell(x))
-      // for a [[buildResidual]] one ([[isResidual]] — the codebook's flag
-      // is the contract). Encoding the delta raw against a residual-space
-      // codebook would append codes that decode as garbage ADC scores with
-      // no error anywhere — the exact-rerank vectors (`ce`) are unaffected,
-      // which is precisely what would keep it silent. q338 hash-gates this
-      // branch (its oracle forms every corpus vector's residual, delta
-      // included).
-      val toEncode =
-        if (residual)
-          assigned
-            .join(broadcast(cent.select(col("cent_id"), col("cent_e"))), "cent_id")
-            .select(col("cid").as("vid"),
-              zip_with(col("ce"), col("cent_e"), (a, b) => a - b).as("ve"))
-        else delta.select(col(idCol).as("vid"), toDouble(col(embCol)).as("ve"))
       val codes = Similarity.pqEncodeAgainst(toEncode, cb, nSub, subDim).drop("recon")
       // same one-file-per-cell rule as build: the append adds at most ONE
       // file per touched cell per refresh instead of tasks×cells
@@ -509,53 +437,42 @@ object IvfIndex {
     * per-query LUT over the persisted codebook → candidates scored by
     * nSub code lookups (the pruned inverted file supplies codes, no float
     * vectors touched) → exact rerank of the k·queries short list using
-    * the vectors carried INLINE in the probed cells. DECIMAL-accumulated
-    * ADC sum and id tie-breaks mirror ivfPqTopK exactly.
+    * the vectors carried INLINE in the probed cells, all through
+    * [[Similarity.adcTopK]] — DECIMAL-accumulated ADC sum and id
+    * tie-breaks identical to ivfPqTopK's.
+    *
+    * Either layout serves here: the codebook's flag ([[isResidual]]) is
+    * read once, and a residual index's candidate score gains the coarse
+    * term `dot(q, centroid(cell))` — one bounded probe-pair computation
+    * (≤ maxProbePairs rows against the broadcast √N centroid table),
+    * computed fresh rather than un-normalized from the probe cosine (a
+    * multiply-back would be a different IEEE op than never dividing).
     */
   def servePqTopK(
       spark: SparkSession, indexDir: String, queries: DataFrame,
       idCol: String, embCol: String, k: Int, nSub: Int, subDim: Int,
       nProbe: Int, maxProbePairs: Int = 1000000): DataFrame = {
-    // the symmetric contract to servePqResidualTopK's: raw ADC against
-    // residual-space codes would score dot(q, x − centroid) with no
-    // centroid term — plausible numbers, silently wrong ranks
     Publish.recover(spark, indexDir)
-    require(!isResidual(indexDir),
-      s"$indexDir was built by buildResidual — its codes live in residual " +
-        "space; use servePqResidualTopK")
     // the ADC path rebuilds its LUT and rerank from the query relation
     // directly, so the slim (qid, cent_id) pair relation is all it needs
     val (probes, cells) = collectedProbes(
       spark, indexDir, queries, idCol, embCol, nProbe, maxProbePairs)
     val inv = prunedInvfile(spark, indexDir, cells)
     val q = normalizedRel(queries, idCol, embCol, "qid", "qe")
-    val cb = spark.read.parquet(s"$indexDir/codebook")
-    val off = (col("s") * subDim + 1).cast("int")
-    val lut = q.select(col("qid"), col("qe"))
-      .withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
-      .crossJoin(broadcast(cb))
-      .select(col("qid"), col("s"), col("code_id"),
-        dot(slice(col("qe"), off, lit(subDim)), slice(col("cbe"), off, lit(subDim))).as("v"))
-    val candCodes = broadcast(probes)
+    val centDot = Option.when(isResidual(indexDir)) {
+      val cent = spark.read.parquet(s"$indexDir/centroids")
+      broadcast(probes)
+        .join(q.select(col("qid"), col("qe")), "qid")
+        .join(broadcast(cent.select(col("cent_id"), col("cent_e"))), "cent_id")
+        .select(col("qid"), col("cent_id"), dot(col("qe"), col("cent_e")).as("cdot"))
+    }
+    val cands = broadcast(probes)
       .join(inv, "cent_id")
       .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        explode(array((0 until nSub).map(i =>
-          struct(lit(i).as("s"), col(s"code_$i").as("code_id"))): _*)).as("sc"))
-      .select(col("qid"), col("cid"), col("sc.s").as("s"), col("sc.code_id").as("code_id"))
-    val adc = candCodes.join(broadcast(lut), Seq("qid", "s", "code_id"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("v").cast(DecimalType(38, 18))).cast("double").as("adc"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid").asc)
-    val top = adc.withColumn("rn", row_number().over(wTop).cast("bigint"))
-      .filter(col("rn") <= k)
     // rerank reads the short list's full vectors from the probed cells
     // (every shortlist cid lives in a probed cell by construction)
-    broadcast(top)
-      .join(inv.select(col("cid"), col("ce"), col("ce_n")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"), col("rn"), col("adc"),
-        (dot(col("qe"), col("ce")) / (col("qe_n") * col("ce_n"))).as("cos"))
+    Similarity.adcTopK(q, cands, spark.read.parquet(s"$indexDir/codebook"),
+      inv.select(col("cid"), col("ce"), col("ce_n")), nSub, subDim, k, centDot)
   }
 
   /** SemDeDup's recurring term served from the persisted assignment: the
@@ -798,16 +715,19 @@ object IvfIndex {
     *
     * Parameterization is re-derived from the CURRENT corpus size — that
     * is the point of a rebuild: √N' cells, ~4√N' training sample, one
-    * Lloyd iteration (the q323 recipe), N'/nCodewords codebook. Pass
-    * `cbTrain = true` for the per-subspace-trained codebook (q332's
-    * FAISS recipe) when the original build used one.
+    * Lloyd iteration (the q323 recipe), N'/nCodewords codebook. The
+    * layout is the index's own: the one writer behind [[build]] and
+    * [[buildResidual]] stages residual codes (and the flag) when
+    * [[isResidual]] holds. Pass `cbTrain = true` for the
+    * per-subspace-trained codebook (q332's FAISS recipe) when the original
+    * build used one; a residual index has no trained form and refuses it.
     */
   def rebuild(
       spark: SparkSession, indexDir: String, nSub: Int, subDim: Int,
       trainIters: Int = 1, nCodewords: Int = 64, cbTrain: Boolean = false): Unit = {
     Publish.recover(spark, indexDir)
-    // A residual-coded index must stage through the residual writer: raw
-    // codes under a residual flag would be silent ADC corruption. q339
+    // A residual-coded index must stage residual codes again: raw codes
+    // under a residual flag would be silent ADC corruption. q339
     // hash-gates the residual staging; Extended72Spec pins the flag
     // round-trip.
     val residual = isResidual(indexDir)
@@ -823,12 +743,8 @@ object IvfIndex {
     val codeStride = math.max(1L, n / nCodewords)
     val pairsTh = pairsThresholdOf(indexDir)
     commit(spark, indexDir, Publish.Replace, BuildComponents ++ pairsTh.map(_ => "pairs")) { stage =>
-      if (residual)
-        writeResidual(corpus, "vec_id", "embedding", stride, trainIters, Some(sample),
-          nSub, subDim, codeStride, stage)
-      else
-        writeRaw(corpus, "vec_id", "embedding", stride, trainIters, Some(sample),
-          nSub, subDim, codeStride, if (cbTrain) Some(sample) else None, stage)
+      writeIndex(corpus, "vec_id", "embedding", stride, trainIters, Some(sample),
+        nSub, subDim, codeStride, residual, if (cbTrain) Some(sample) else None, stage)
       pairsTh.foreach(th => writePairs(spark, stage, s"$stage/pairs", th))
     } { stage =>
       val stagedRows = spark.read.parquet(s"$stage/invfile").count()

@@ -498,6 +498,56 @@ object Similarity {
         x => x.getField("v")).as("cbe"))
   }
 
+  /** The ADC scoring plan — the ONE definition shared by [[ivfPqTopK]]
+    * and [[IvfIndex.servePqTopK]], so the lazy and the persisted serve
+    * cannot fork. `q` is a normalizedRel (qid, qe, qe_n); `cands` the
+    * probed (qid, cid, code_0..code_{nSub-1}) rows, self-pairs already
+    * excluded; `cb` the codebook (code_id, cbe); `rerank` the exact
+    * vectors (cid, ce, ce_n) of every candidate.
+    *
+    * Per-query subspace lookup table: raw inner product of the query's
+    * s-th subvector with each codeword's s-th subvector (same ascending
+    * fold as the encode distance — slice preserves element order); each
+    * candidate scores nSub LUT lookups, summed in DECIMAL(38,18) so the
+    * addition is order-independent. `centDot` — (qid, cent_id, cdot), a
+    * residual index's `dot(q, centroid(cell))`, with `cands` then also
+    * carrying cent_id — adds the coarse term back, since
+    * `dot(q, x̂) = dot(q, centroid) + dot(q, residual codeword)`. The
+    * (adc desc, cid asc) top-k short list is then reranked by exact
+    * cosine. Returns (qid, cid, rn, adc, cos).
+    */
+  private[ext] def adcTopK(
+      q: DataFrame, cands: DataFrame, cb: DataFrame, rerank: DataFrame,
+      nSub: Int, subDim: Int, k: Int, centDot: Option[DataFrame]): DataFrame = {
+    val off = (col("s") * subDim + 1).cast("int")
+    val lut = q.select(col("qid"), col("qe"))
+      .withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
+      .crossJoin(broadcast(cb))
+      .select(col("qid"), col("s"), col("code_id"),
+        dot(slice(col("qe"), off, lit(subDim)), slice(col("cbe"), off, lit(subDim))).as("v"))
+    val keys = (Seq("qid", "cid") ++ centDot.map(_ => "cent_id")).map(col)
+    val candCodes = cands
+      .select(keys :+ explode(array((0 until nSub).map(i =>
+        struct(lit(i).as("s"), col(s"code_$i").as("code_id"))): _*)).as("sc"): _*)
+      .select(keys ++ Seq(col("sc.s").as("s"), col("sc.code_id").as("code_id")): _*)
+    val lutSum = candCodes.join(broadcast(lut), Seq("qid", "s", "code_id"))
+      .groupBy(keys: _*)
+      .agg(sum(col("v").cast(org.apache.spark.sql.types.DecimalType(38, 18)))
+        .cast("double").as("adc"))
+    val adc = centDot.fold(lutSum)(cd =>
+      lutSum.join(broadcast(cd), Seq("qid", "cent_id"))
+        .select(col("qid"), col("cid"), (col("adc") + col("cdot")).as("adc")))
+    val wTop = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid").asc)
+    val top = adc.withColumn("rn", row_number().over(wTop).cast("bigint"))
+      .filter(col("rn") <= k)
+    // exact rerank of the short list: k·queries rows read full vectors
+    broadcast(top)
+      .join(rerank, "cid")
+      .join(broadcast(q), "qid")
+      .select(col("qid"), col("cid"), col("rn"), col("adc"),
+        (dot(col("qe"), col("ce")) / (col("qe_n") * col("ce_n"))).as("cos"))
+  }
+
   /** IVF+PQ search with asymmetric distance computation (ADC — Jégou et
     * al. 2011 §IV): the billion-vector serving composition of the two
     * structures above. IVF cells (seed-only coarse quantizer, [[ivfTopK]]'s
@@ -508,7 +558,7 @@ object Similarity {
     * `nSub` bytes, RAM-resident at any corpus size) and never reads the
     * float vectors. The ADC top-k survivors are then RERANKED with the
     * exact cosine — the standard two-stage serving plan (approximate
-    * prune on codes, exact order on the short list).
+    * prune on codes, exact order on the short list), [[adcTopK]].
     *
     * Determinism/oracle shape: every stage reuses the bit-exact folds the
     * q40/q125 oracles already pin (ascending-index dot, id tie-breaks);
@@ -536,38 +586,13 @@ object Similarity {
       idCol, embCol, "cent_id", "cent_e")
     val q = normalizedRel(queries, idCol, embCol, "qid", "qe")
     val probes = probeNearestCells(q, seed, nProbe, carryQuery = false)
-    // per-query subspace lookup table: raw inner product of the query's
-    // s-th subvector with each codeword's s-th subvector (same ascending
-    // fold as the encode distance — slice preserves element order)
     val cb = corpus.filter(pmod(col(idCol), lit(codeStride)) === 0)
       .select(col(idCol).as("code_id"), toDouble(col(embCol)).as("cbe"))
-    val off = (col("s") * subDim + 1).cast("int")
-    val lut = q.select(col("qid"), col("qe"))
-      .withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
-      .crossJoin(broadcast(cb))
-      .select(col("qid"), col("s"), col("code_id"),
-        dot(slice(col("qe"), off, lit(subDim)), slice(col("cbe"), off, lit(subDim))).as("v"))
-    // candidate scan: probed cells' members, scored by nSub LUT lookups
-    val candCodes = probes.join(cells, "cent_id")
+    // candidate scan: probed cells' members with their codes
+    val cands = probes.join(cells, "cent_id")
       .filter(col("cid") =!= col("qid"))
       .join(codes, col("cid") === col("vid"))
-      .select(col("qid"), col("cid"),
-        explode(array((0 until nSub).map(i =>
-          struct(lit(i).as("s"), col(s"code_$i").as("code_id"))): _*)).as("sc"))
-      .select(col("qid"), col("cid"), col("sc.s").as("s"), col("sc.code_id").as("code_id"))
-    val adc = candCodes.join(broadcast(lut), Seq("qid", "s", "code_id"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("v").cast(org.apache.spark.sql.types.DecimalType(38, 18)))
-        .cast("double").as("adc"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid").asc)
-    val top = adc.withColumn("rn", row_number().over(wTop).cast("bigint"))
-      .filter(col("rn") <= k)
-    // exact rerank of the short list: k·queries rows read full vectors
-    broadcast(top)
-      .join(c, "cid")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"), col("rn"), col("adc"),
-        (dot(col("qe"), col("ce")) / (col("qe_n") * col("ce_n"))).as("cos"))
+    adcTopK(q, cands, cb, c, nSub, subDim, k, centDot = None)
   }
 
   /** Embedding-cosine near-duplicate pairs, blocked on `blockCol` (e.g. a

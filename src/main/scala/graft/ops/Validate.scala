@@ -37,14 +37,12 @@ object Validate {
     * EAGER at call time (the whole point is a fail-fast answer before
     * anything downstream runs): executes the aggregate when called and
     * returns driver-side scalars — one Long per check. Callers that
-    * need lazy composition use [[violationCountsDf]] (a DataFrame) or
-    * [[observed]] (rides the consuming action's own pass).
+    * need lazy composition use [[observed]] (rides the consuming
+    * action's own pass).
     */
   def violationCounts(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] = {
     require(checks.nonEmpty, "no checks given")
-    val aggs = checks.zipWithIndex.map { case (c, i) =>
-      sum(when(coalesce(c.passes, lit(false)), 0L).otherwise(1L)).as(s"c$i")
-    }
+    val aggs = violationAggs(checks)
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     checks.zipWithIndex.collect {
       case (c, i) if !row.isNullAt(i) && row.getLong(i) > 0 => CheckResult(c.name, row.getLong(i))
@@ -61,17 +59,6 @@ object Validate {
     df
   }
 
-  /** Relational form of the same gate: a 1-row DataFrame of violation
-    * counts (used by the driver-facing validation query, where the result
-    * must be a DataFrame rather than an exception).
-    */
-  def violationCountsDf(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val aggs = checks.map { c =>
-      sum(when(coalesce(c.passes, lit(false)), 0L).otherwise(1L)).as(c.name)
-    }
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Zero-extra-pass variant via the Observation API: checks ride along
     * with whatever action consumes the returned DataFrame (the write
     * itself), instead of [[gate]]'s separate validation scan. Call the
@@ -85,9 +72,7 @@ object Validate {
     */
   def observed(df: DataFrame, checks: Seq[Check], name: String = "graft_checks"): (DataFrame, () => Seq[CheckResult]) = {
     val obs = org.apache.spark.sql.Observation(name)
-    val aggs = checks.zipWithIndex.map { case (c, i) =>
-      sum(when(coalesce(c.passes, lit(false)), 0L).otherwise(1L)).as(s"c$i")
-    }
+    val aggs = violationAggs(checks)
     val out = df.observe(obs, aggs.head, aggs.tail: _*)
     val fetch = () => {
       val row = obs.get
@@ -98,4 +83,12 @@ object Validate {
     }
     (out, fetch)
   }
+
+  /** One violation count per check, `c<i>` for the i-th: a row fails a
+    * check unless its predicate is TRUE (NULL counts as a violation).
+    */
+  private def violationAggs(checks: Seq[Check]): Seq[Column] =
+    checks.zipWithIndex.map { case (c, i) =>
+      sum(when(coalesce(c.passes, lit(false)), 0L).otherwise(1L)).as(s"c$i")
+    }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Text
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{hash32Sql, tbl}
 
 /** Round-9 batch: operational-scale tooling and statistics the battery
   * did not yet cover — join-key skew advisory (the pre-flight check that
@@ -29,9 +29,6 @@ object Extended28 {
 
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-
-  /** DuckDB twin of [[Text.tokenHash32]] (q141's pattern). */
-  private def hash32Sql(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
 
   private val wsSql = "string_split_regex(trim(lower(text)), '\\s+')"
 

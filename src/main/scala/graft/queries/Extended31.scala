@@ -20,12 +20,6 @@ object Extended31 {
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
 
-  /** Rounding formula in SQL text that evaluates identically in Spark SQL
-    * (inside HOF lambdas, where the Column API can't reach) and DuckDB.
-    */
-  private def rexpr(e: String, n: Int): String =
-    s"(sign($e) * floor(abs($e) * 1e$n + 0.5) / 1e$n + 0.0)"
-
   val all: Seq[QueryDef] = Seq(
 
     // ----- q229: Zipf rank-frequency power-law fit ----------------------
@@ -130,8 +124,8 @@ object Extended31 {
         val ser = monthly.groupBy(col("flag"))
           .agg(count(lit(1)).as("n_months"),
             sort_array(collect_list(struct(col("m"), col("y")))).as("arr"))
-        val lStep = rexpr("0.3D * e.y + 0.7D * (acc.l + acc.b)", 4)
-        val bStep = rexpr(s"0.1D * ($lStep - acc.l) + 0.9D * acc.b", 4)
+        val lStep = rs("0.3D * e.y + 0.7D * (acc.l + acc.b)", 4)
+        val bStep = rs(s"0.1D * ($lStep - acc.l) + 0.9D * acc.b", 4)
         val fold = expr(
           s"""aggregate(arr,
              |  named_struct('l', CAST(0.0 AS DOUBLE), 'b', CAST(0.0 AS DOUBLE), 'i', CAST(0 AS BIGINT)),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.{Similarity, Text}
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{hash32Sql, tbl}
 
 /** Round-9 seventh batch: retrieval evaluation (recall@k / precision@k /
   * MRR over the embedding index — the acceptance metrics for the q39/q40
@@ -19,7 +19,6 @@ object Extended34 {
 
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-  private def hash32Sql(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
 
   // q189's subject construction constants (48 h observation window)
   private val ObsUs = 48L * 3600000000L

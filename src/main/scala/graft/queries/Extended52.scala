@@ -37,8 +37,6 @@ object Extended52 {
 
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-  private def rexpr(e: String, n: Int): String =
-    s"(sign($e) * floor(abs($e) * 1e$n + 0.5) / 1e$n + 0.0)"
 
   private val wsSql = "string_split_regex(trim(lower(text)), '\\s+')"
 
@@ -67,8 +65,8 @@ object Extended52 {
           .agg(count(lit(1)).as("n_days"),
             sort_array(collect_list(struct(col("day"), col("y")))).as("arr"))
           .filter(col("n_days").between(MinDays, MaxDays))
-        val zStep = rexpr(s"${Alpha}D * e.y + (1.0D - ${Alpha}D) * acc.z", 4)
-        val aStep = rexpr(s"${Alpha}D * (e.day - acc.pd) + (1.0D - ${Alpha}D) * acc.a", 4)
+        val zStep = rs(s"${Alpha}D * e.y + (1.0D - ${Alpha}D) * acc.z", 4)
+        val aStep = rs(s"${Alpha}D * (e.day - acc.pd) + (1.0D - ${Alpha}D) * acc.a", 4)
         val fold = expr(
           s"""aggregate(arr,
              |  named_struct('z', CAST(0.0 AS DOUBLE), 'a', CAST(0.0 AS DOUBLE),
@@ -152,20 +150,20 @@ object Extended52 {
         // lambda reads the correlation columns from the enclosing row.
         // Per-step 12-dp rounding keeps both engines on one vector walk.
         def wExpr(a: String, b: String, c: String) =
-          rexpr(s"$a * acc.v1 + $b * acc.v2 + $c * acc.v3", 12)
+          rs(s"$a * acc.v1 + $b * acc.v2 + $c * acc.v3", 12)
         val w1 = wExpr("1.0D", "rxy", "rxz")
         val w2 = wExpr("rxy", "1.0D", "ryz")
         val w3 = wExpr("rxz", "ryz", "1.0D")
         val nrm = s"sqrt($w1 * $w1 + $w2 * $w2 + $w3 * $w3)"
         val fold = expr(
           s"""aggregate(sequence(1, 16),
-             |  named_struct('v1', CAST(${rexpr("1.0D / sqrt(3.0D)", 12)} AS DOUBLE),
-             |    'v2', CAST(${rexpr("1.0D / sqrt(3.0D)", 12)} AS DOUBLE),
-             |    'v3', CAST(${rexpr("1.0D / sqrt(3.0D)", 12)} AS DOUBLE)),
+             |  named_struct('v1', CAST(${rs("1.0D / sqrt(3.0D)", 12)} AS DOUBLE),
+             |    'v2', CAST(${rs("1.0D / sqrt(3.0D)", 12)} AS DOUBLE),
+             |    'v3', CAST(${rs("1.0D / sqrt(3.0D)", 12)} AS DOUBLE)),
              |  (acc, k) -> named_struct(
-             |    'v1', ${rexpr(s"$w1 / $nrm", 12)},
-             |    'v2', ${rexpr(s"$w2 / $nrm", 12)},
-             |    'v3', ${rexpr(s"$w3 / $nrm", 12)}))""".stripMargin)
+             |    'v1', ${rs(s"$w1 / $nrm", 12)},
+             |    'v2', ${rs(s"$w2 / $nrm", 12)},
+             |    'v3', ${rs(s"$w3 / $nrm", 12)}))""".stripMargin)
         val it = withR.withColumn("v", fold)
           // sign convention: first component non-negative
           .withColumn("sgn",

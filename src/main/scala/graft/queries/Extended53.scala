@@ -28,8 +28,6 @@ object Extended53 {
 
   private def R(c: Column, n: Int) = Num.roundTo(c, n)
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
-  private def rexpr(e: String, n: Int): String =
-    s"(sign($e) * floor(abs($e) * 1e$n + 0.5) / 1e$n + 0.0)"
 
   /** Smoothing constants (level / trend / seasonal). */
   private val A = "0.3"
@@ -49,10 +47,10 @@ object Extended53 {
           .agg(count(lit(1)).as("n_months"),
             sort_array(collect_list(struct(col("m"), col("y")))).as("arr"))
         // sPrev = the seasonal from 12 steps ago (ring head)
-        val lStep = rexpr(
+        val lStep = rs(
           s"${A}D * (e.y - element_at(acc.s, 1)) + (1.0D - ${A}D) * (acc.l + acc.b)", 4)
-        val bStep = rexpr(s"${B}D * ($lStep - acc.l) + (1.0D - ${B}D) * acc.b", 4)
-        val sStep = rexpr(
+        val bStep = rs(s"${B}D * ($lStep - acc.l) + (1.0D - ${B}D) * acc.b", 4)
+        val sStep = rs(
           s"${G}D * (e.y - $lStep) + (1.0D - ${G}D) * element_at(acc.s, 1)", 4)
         val fold = expr(
           s"""aggregate(arr,

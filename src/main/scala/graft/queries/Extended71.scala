@@ -54,8 +54,9 @@ object Extended71 {
     * codebook lives in residual space (codeword = strided vector's
     * residual); the candidate score is
     * `dot(q, centroid) + Σ_s lut(q, s, code_s)` with the cross-subspace
-    * sum DECIMAL-accumulated, mirroring servePqResidualTopK term for
-    * term. Component arithmetic keeps Spark's op order exactly:
+    * sum DECIMAL-accumulated, mirroring [[graft.ext.Similarity.adcTopK]]
+    * with the centroid term servePqTopK adds for a residual index, term
+    * for term. Component arithmetic keeps Spark's op order exactly:
     * `(v[i] − cent_v[i]) − (w[i] − cent_w[i])` is the same three IEEE
     * subtractions as Spark's residual-array-then-diff fold.
     *
@@ -209,7 +210,7 @@ object Extended71 {
         val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
-          .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
+          .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
             "embedding", k = 5, nSub = IvfIndex.Cache.nSubHi,
             subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
           .select(col("qid"), col("cid"), col("rn"),

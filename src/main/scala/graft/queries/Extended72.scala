@@ -14,11 +14,12 @@ import QueryDef.tbl
   * whatever codebook the index persisted, and [[IvfIndex.rebuild]] staged
   * through the raw [[IvfIndex.build]] — on a residual index either one
   * silently corrupts the ADC path (the `_PQ_RESIDUAL` flag survives,
-  * servePqResidualTopK keeps accepting the index, and the exact-rerank
+  * servePqTopK keeps adding the centroid term, and the exact-rerank
   * vectors are untouched, so nothing errors; only serve ranks go wrong).
   * Both now key on the flag (which lives in `codebook/`, so a rebuild
-  * replaces it with the codebook it describes); these two queries put each branch under
-  * the hash gate.
+  * replaces it with the codebook it describes), as does the one ADC
+  * serve, [[IvfIndex.servePqTopK]]; these two queries put the residual
+  * layout's refresh and rebuild under the hash gate.
   *
   * q338: buildResidual(90%) → refresh(10%) → residual ADC serve. The
   * oracle composes q328's old-trained build CTEs (centroids + codebook
@@ -30,7 +31,7 @@ import QueryDef.tbl
   * (q329's provenance gate, replayed in residual space).
   *
   * q339: buildResidual(90%) → refresh(10%) → rebuild → residual ADC
-  * serve. rebuild must stage through buildResidual at union-derived
+  * serve. rebuild must stage residual codes at union-derived
   * parameters, so the committed index equals a FRESH buildResidual on the
   * full corpus — q337's oracle, verbatim (the identity q335 pins for the
   * raw lifecycle).
@@ -51,7 +52,7 @@ object Extended72 {
         val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true, life = Refreshed))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
-          .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
+          .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
             "embedding", k = 5, nSub = IvfIndex.Cache.nSubHi,
             subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
           .select(col("qid"), col("cid"), col("rn"),
@@ -67,7 +68,7 @@ object Extended72 {
         val ix = IvfIndex.Cache.indexFor(s, dir, Recipe(HiRes, residual = true, life = Rebuilt))
         val emb = tbl(s, dir, "embeddings")
         IvfIndex
-          .servePqResidualTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
+          .servePqTopK(s, ix, emb.filter(col("vec_id") < 10), "vec_id",
             "embedding", k = 5, nSub = IvfIndex.Cache.nSubHi,
             subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
           .select(col("qid"), col("cid"), col("rn"),

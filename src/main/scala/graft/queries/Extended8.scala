@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Text
 import graft.ops.Num
-import QueryDef.tbl
+import QueryDef.{hash32Sql, tbl}
 
 /** Round-5 batch: entity-resolution & statistics operators a curation
   * pipeline needs beyond dedup — native Jaro-Winkler verify (q135),
@@ -23,11 +23,6 @@ object Extended8 {
   private def rs(e: String, n: Int) = Num.roundSql(e, n)
 
   import TextQueries.wsSql
-
-  /** DuckDB twin of [[Text.tokenHash32]]: first 8 hex digits of md5(t),
-    * parsed as an unsigned 32-bit value (always < 2^32, so BIGINT-safe).
-    */
-  private def hash32Sql(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
 
   val all: Seq[QueryDef] = Seq(
 

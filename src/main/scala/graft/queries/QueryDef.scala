@@ -43,6 +43,12 @@ object QueryDef {
   def moneySumSql(e: String): String =
     s"CAST(SUM(CAST(${Num.roundSql(e, 4)} AS DECIMAL(18,4))) AS DOUBLE)"
 
+  /** DuckDB twin of [[graft.ext.Text.tokenHash32]]: first 8 hex digits of
+    * md5(e), parsed as an unsigned 32-bit value (always < 2^32, so
+    * BIGINT-safe).
+    */
+  def hash32Sql(e: String): String = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
+
   /** Best-effort recursive delete for streaming queries' per-invocation
     * scratch dirs (stream source copy, sink, checkpoint) — they are
     * created fresh each call and must not accumulate across verify/bench

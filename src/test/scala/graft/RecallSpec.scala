@@ -272,9 +272,8 @@ class RecallSpec extends SparkSuite {
         k = 5, nSub = IvfIndex.Cache.nSub, subDim = IvfIndex.Cache.subDim, nProbe = 3)
       def serveHi() = IvfIndex.servePqTopK(spark, ixHi, q, "vec_id", "embedding",
         k = 5, nSub = IvfIndex.Cache.nSubHi, subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
-      def serveRes() = IvfIndex.servePqResidualTopK(spark, ixRes, q, "vec_id",
-        "embedding", k = 5, nSub = IvfIndex.Cache.nSubHi,
-        subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
+      def serveRes() = IvfIndex.servePqTopK(spark, ixRes, q, "vec_id", "embedding",
+        k = 5, nSub = IvfIndex.Cache.nSubHi, subDim = IvfIndex.Cache.subDimHi, nProbe = 3)
       val (preLo, preHi, preRes) =
         (preRecall(serveLo()), preRecall(serveHi()), preRecall(serveRes()))
       val (dLo, dHi, dRes) =
