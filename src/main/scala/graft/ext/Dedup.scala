@@ -185,11 +185,22 @@ object Dedup {
   private def verifiedJaccard(
       cand: DataFrame, shA: DataFrame, shB: DataFrame,
       sizesA: DataFrame, sizesB: DataFrame, threshold: Double): DataFrame =
-    cand
-      .join(shA.as("sa"), col("a_id") === col("sa.doc_id"))
-      .join(shB.as("sb"), col("b_id") === col("sb.doc_id") && col("sa.sh_h") === col("sb.sh_h"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_inter"))
+    jaccardOf(
+      cand
+        .join(shA.as("sa"), col("a_id") === col("sa.doc_id"))
+        .join(shB.as("sb"), col("b_id") === col("sb.doc_id") && col("sa.sh_h") === col("sb.sh_h"))
+        .groupBy(col("a_id"), col("b_id"))
+        .agg(count(lit(1)).as("n_inter")),
+      sizesA, sizesB, threshold)
+
+  /** The Jaccard tail every exact-pair path shares: (a_id, b_id,
+    * n_inter) intersection counts joined to each side's shingle-set size
+    * (doc_id, n_sh), jaccard = n_inter / (n_a + n_b − n_inter), kept at
+    * ≥ threshold. Returns (a_id, b_id, jaccard).
+    */
+  private def jaccardOf(
+      inter: DataFrame, sizesA: DataFrame, sizesB: DataFrame, threshold: Double): DataFrame =
+    inter
       .join(sizesA.withColumnRenamed("n_sh", "n_a"), col("a_id") === col("doc_id")).drop("doc_id")
       .join(sizesB.withColumnRenamed("n_sh", "n_b"), col("b_id") === col("doc_id")).drop("doc_id")
       .withColumn(
@@ -225,17 +236,12 @@ object Dedup {
       .select(col("doc_id"), xxhash64(col("shingle")).as("sh_h")))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     if (maxDf == Int.MaxValue) {
-      sh.as("x")
-        .join(sh.as("y"), col("x.sh_h") === col("y.sh_h") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-        .agg(count(lit(1)).as("n_inter"))
-        .join(sizes.withColumnRenamed("n_sh", "n_a"), col("a_id") === col("doc_id")).drop("doc_id")
-        .join(sizes.withColumnRenamed("n_sh", "n_b"), col("b_id") === col("doc_id")).drop("doc_id")
-        .withColumn(
-          "jaccard",
-          col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
+      jaccardOf(
+        sh.as("x")
+          .join(sh.as("y"), col("x.sh_h") === col("y.sh_h") && col("x.doc_id") < col("y.doc_id"))
+          .groupBy(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+          .agg(count(lit(1)).as("n_inter")),
+        sizes, sizes, threshold)
     } else {
       // Hot-shingle guard for the 100×-scale hazard: the self-join above
       // produces O(df²) pair rows PER shingle, so one boilerplate shingle
@@ -271,16 +277,11 @@ object Dedup {
         .join(hot.as("hb"), col("b_id") === col("hb.doc_id") && col("ha.sh_h") === col("hb.sh_h"))
         .groupBy(col("a_id"), col("b_id"))
         .agg(count(lit(1)).as("n_hot"))
-      coldPairs
-        .join(hotInter, Seq("a_id", "b_id"), "left")
-        .withColumn("n_inter", col("n_cold") + coalesce(col("n_hot"), lit(0L)))
-        .join(sizes.withColumnRenamed("n_sh", "n_a"), col("a_id") === col("doc_id")).drop("doc_id")
-        .join(sizes.withColumnRenamed("n_sh", "n_b"), col("b_id") === col("doc_id")).drop("doc_id")
-        .withColumn(
-          "jaccard",
-          col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
+      jaccardOf(
+        coldPairs
+          .join(hotInter, Seq("a_id", "b_id"), "left")
+          .withColumn("n_inter", col("n_cold") + coalesce(col("n_hot"), lit(0L))),
+        sizes, sizes, threshold)
     }
   }
 
@@ -302,13 +303,6 @@ object Dedup {
       .select(col("doc_id"), array((0 until numHashes).map(s => col(s"h$s")): _*).as("sig"))
   }
 
-  /** LSH banding: candidate pairs whose signatures collide in ≥1 band of
-    * `rowsPerBand` consecutive signature slots, then EXACT Jaccard
-    * verification of candidates only. With numHashes=64, rowsPerBand=4
-    * (16 bands), a pair at jaccard 0.5 is caught with p ≈ 0.65; at 0.8
-    * p ≈ 0.9997 — tune bands/rows per corpus; the verify step keeps
-    * precision exact either way.
-    */
   /** (doc_id, band, band-hash) relation from a signature relation. */
   private def bandRel(sig: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
     sig.select(
@@ -323,6 +317,13 @@ object Dedup {
     shingleRel(df, idCol, textCol, k)
       .select(col("doc_id"), xxhash64(col("shingle")).as("sh_h"))
 
+  /** LSH banding: candidate pairs whose signatures collide in ≥1 band of
+    * `rowsPerBand` consecutive signature slots, then EXACT Jaccard
+    * verification of candidates only. With numHashes=64, rowsPerBand=4
+    * (16 bands), a pair at jaccard 0.5 is caught with p ≈ 0.65; at 0.8
+    * p ≈ 0.9997 — tune bands/rows per corpus; the verify step keeps
+    * precision exact either way.
+    */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String, k: Int,
       numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
@@ -388,30 +389,26 @@ object Dedup {
     * from scratch each round and grows unboundedly. The convergence
     * check (`isEmpty`) brings back one scalar per round.
     *
-    * Durability: the default localCheckpoint stores blocks on executor
-    * local dirs — fast, but an executor loss mid-iteration kills the
-    * lineage AND the job. A production run on a real cluster passes
-    * `checkpointDir` (e.g. an HDFS/S3 path): iteration state then goes
-    * through reliable `checkpoint()` storage and survives executor loss.
-    * Same plan either way, only the storage tier changes.
+    * Durability: every materialization goes through [[graft.ops.Ckpt]] —
+    * localCheckpoint by default, which an executor loss mid-iteration
+    * kills along with the job; a production run on a real cluster sets
+    * the session's `graft.checkpoint.dir` (e.g. an HDFS/S3 path), and
+    * iteration state then goes through reliable `checkpoint()` storage
+    * and survives executor loss. Same plan either way, only the storage
+    * tier changes.
     */
-  def connectedComponents(
-      pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint()
-      else graft.ops.Ckpt(df) // falls back to graft.checkpoint.dir, then local
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // materialize the (possibly expensive) pair plan ONCE, then build the
     // symmetric edge relation from the checkpointed copy — a union of the
     // raw plan with its own swap would execute pair generation twice
-    val base = ckpt(pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
-    val edges = ckpt(
+    val base = graft.ops.Ckpt(pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
+    val edges = graft.ops.Ckpt(
       base.union(base.select(col("dst").as("src"), col("src").as("dst"))))
     // seed with the ONE-HOP minimum (min of self and direct neighbors)
     // instead of self: a clique — the common near-dup cluster shape —
     // then converges inside the first two-hop round, so the loop exits
     // after one checkpoint instead of two
-    var labels = ckpt(edges
+    var labels = graft.ops.Ckpt(edges
       .groupBy(col("src").as("node"))
       .agg(least(min(col("dst")), col("src")).as("label")))
     // one edge-propagation step: label'(n) = min(label(n), min over
@@ -438,13 +435,30 @@ object Dedup {
       // label instead of scanning every partition; only the converged
       // final round pays a full scan.
       val withOld = labels.withColumn("__old", col("label"))
-      val next = ckpt(propagate(propagate(withOld, Seq("__old")), Seq("__old")))
+      val next = graft.ops.Ckpt(propagate(propagate(withOld, Seq("__old")), Seq("__old")))
       changed = !next.filter(col("label") =!= col("__old")).isEmpty
       labels = next.select(col("node"), col("label"))
       i += 1
     }
     require(!changed, s"connectedComponents did not converge in $MaxIter rounds")
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** Pair set → keep-min decision table, the clean step's keep-first rule
+    * for near-duplicates: [[connectedComponents]] over the (a_id, b_id)
+    * duplicate graph, then every id of `corpus`'s `idCol` — pairless ids
+    * are their own cluster — with `keep` on each cluster's min id.
+    * Returns (id, cluster_id, keep). Shared by the lazy and persisted
+    * SemDeDup paths ([[Similarity.semanticDedup]],
+    * [[IvfIndex.serveSemDedup]], [[IvfIndex.serveSemDedupFromPairs]]).
+    */
+  private[ext] def decisionTable(pairs: DataFrame, corpus: DataFrame, idCol: String): DataFrame = {
+    val clusters = connectedComponents(pairs)
+      .select(col("doc_id").as("id"), col("cluster_id"))
+    corpus.select(col(idCol).as("id"))
+      .join(clusters, Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
+      .withColumn("keep", col("id") === col("cluster_id"))
   }
 
   /** 64-bit SimHash over the token multiset: per bit, majority vote of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-import Similarity.{normalizedRel, assignToCells, centroidsOf, dot, toDouble}
+import Similarity.{normalizedRel, assignToCells, centroidsOf, dot, toDouble, withinCellPairs}
 
 /** Persisted IVF(+PQ) index: the production serving layout the lazy
   * [[Similarity.ivfTopK]]/[[Similarity.ivfPqTopK]] subplans stand in for
@@ -288,22 +288,11 @@ object IvfIndex {
           else assigned.select(size(col("ce"))).head().getInt(0) // limit-1 job on the checkpoint
         val deltaBytes = nDelta * (dim.toLong * 8 + 48) // ce doubles + cid/ce_n/cent_id + array header
         val dSide = if (deltaBytes <= 64L * 1024 * 1024) broadcast(assigned) else assigned
-        // delta × existing: the live invfile holds no delta row until the
-        // commit; ids canonicalized a_id < b_id (cos is symmetric — same
-        // index-ascending products either way)
-        val dOld = dSide.as("a")
-          .join(inv.as("b"),
-            col("a.cent_id") === col("b.cent_id") && col("a.cid") =!= col("b.cid"))
-          .select(
-            least(col("a.cid"), col("b.cid")).as("a_id"),
-            greatest(col("a.cid"), col("b.cid")).as("b_id"),
-            (dot(col("a.ce"), col("b.ce")) / (col("a.ce_n") * col("b.ce_n"))).as("cos"))
-        val dNew = assigned.as("a")
-          .join(dSide.as("b"),
-            col("a.cent_id") === col("b.cent_id") && col("a.cid") < col("b.cid"))
-          .select(col("a.cid").as("a_id"), col("b.cid").as("b_id"),
-            (dot(col("a.ce"), col("b.ce")) / (col("a.ce_n") * col("b.ce_n"))).as("cos"))
-        dOld.union(dNew).filter(col("cos") >= th).select(col("a_id"), col("b_id"))
+        // delta × existing (the live invfile holds no delta row until the
+        // commit, so the sides are disjoint) plus delta × delta
+        withinCellPairs(dSide, inv, th)
+          .union(withinCellPairs(dSide, dSide, th))
+          .select(col("a_id"), col("b_id"))
           .write.parquet(s"$stage/pairs")
       }
       val codes = Similarity.pqEncodeAgainst(toEncode, cb, nSub, subDim).drop("recon")
@@ -475,20 +464,6 @@ object IvfIndex {
       inv.select(col("cid"), col("ce"), col("ce_n")), nSub, subDim, k, centDot)
   }
 
-  /** SemDeDup's recurring term served from the persisted assignment: the
-    * within-cell pair scan + connected components + min-id keeper over
-    * the inverted file alone — no training and no assignment pass in the
-    * plan, completing the SemDeDup cost decomposition the battery
-    * measures (train O(N) sampled = q325; one N×√N assignment = the
-    * persisted build; THIS — the exact pair term, the N^1.5 floor for
-    * exact SemDeDup — is what a 100 TB deployment re-pays per corpus
-    * refresh). `corpus` supplies the id universe for the decision table
-    * (an id-only column-pruned scan); pair semantics are exactly
-    * [[Similarity.semanticPairs]]' (cell equi-join, cid tie-break,
-    * threshold on the carried-norm cosine), so with the same build
-    * parameters the decision table is identical to
-    * [[Similarity.semanticDedup]]'s.
-    */
   /** Memoized Σ m·(m−1)/2 over the invfile's cell histogram — the pair
     * volume [[serveSemDedup]] sizes its shuffle from. One rollup over the
     * PARTITION column only (≤√N groups, no data columns read); memoized
@@ -506,16 +481,28 @@ object IvfIndex {
           .head().getLong(0))
     }).longValue()
 
+  /** SemDeDup's recurring term served from the persisted assignment: the
+    * within-cell pair scan + connected components + min-id keeper over
+    * the inverted file alone — no training and no assignment pass in the
+    * plan, completing the SemDeDup cost decomposition the battery
+    * measures (train O(N) sampled = q325; one N×√N assignment = the
+    * persisted build; THIS — the exact pair term, the N^1.5 floor for
+    * exact SemDeDup — is what a 100 TB deployment re-pays per corpus
+    * refresh). `corpus` supplies the id universe for the decision table
+    * (an id-only column-pruned scan). The pair rule is
+    * [[Similarity.withinCellPairs]] and the decision step
+    * [[Dedup.decisionTable]], the code [[Similarity.semanticDedup]] runs
+    * over its lazy assignment.
+    */
   def serveSemDedup(
       spark: SparkSession, indexDir: String, corpus: DataFrame, idCol: String,
       threshold: Double): DataFrame = {
     Publish.recover(spark, indexDir)
-    decisionTable(cellPairs(spark, indexDir, threshold), corpus, idCol)
+    Dedup.decisionTable(cellPairs(spark, indexDir, threshold), corpus, idCol)
   }
 
   /** Every within-cell pair of the inverted file at or above `threshold`
-    * — [[Similarity.semanticPairs]]' semantics (cell equi-join, cid
-    * tie-break, carried-norm cosine) over the persisted assignment.
+    * — [[Similarity.withinCellPairs]] over the persisted assignment.
     * The self-join width is sized from the invfile's cell histogram, not
     * the session default (q284's lesson, Extended50.scala): per-cell pair
     * volume grows linearly in N at √N cells, so a fixed session width
@@ -530,26 +517,7 @@ object IvfIndex {
     val inv = spark.read.parquet(s"$indexDir/invfile")
       .select(col("cid"), col("ce"), col("ce_n"), col("cent_id"))
       .repartition(width, col("cent_id"))
-    inv.as("a")
-      .join(inv.as("b"),
-        col("a.cent_id") === col("b.cent_id") && col("a.cid") < col("b.cid"))
-      .select(
-        col("a.cid").as("a_id"), col("b.cid").as("b_id"),
-        (dot(col("a.ce"), col("b.ce")) / (col("a.ce_n") * col("b.ce_n"))).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Pair set → SemDeDup decision table: connected components over the
-    * duplicate graph, min-id keeper, full-corpus id universe.
-    */
-  private def decisionTable(
-      pairs: DataFrame, corpus: DataFrame, idCol: String): DataFrame = {
-    val clusters = Dedup.connectedComponents(pairs)
-      .select(col("doc_id").as("id"), col("cluster_id"))
-    corpus.select(col(idCol).as("id"))
-      .join(clusters, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-      .withColumn("keep", col("id") === col("cluster_id"))
+    withinCellPairs(inv, inv, threshold)
   }
 
   /** Materialize the thresholded within-cell pair set as a `pairs/`
@@ -603,8 +571,7 @@ object IvfIndex {
       spark: SparkSession, indexDir: String, corpus: DataFrame,
       idCol: String): DataFrame = {
     Publish.recover(spark, indexDir)
-    decisionTable(
-      spark.read.parquet(s"$indexDir/pairs"), corpus, idCol)
+    Dedup.decisionTable(spark.read.parquet(s"$indexDir/pairs"), corpus, idCol)
   }
 
   /** Index health monitor — BOTH maintenance triggers [[refresh]]'s

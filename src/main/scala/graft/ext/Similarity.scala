@@ -47,14 +47,17 @@ object Similarity {
     * fold + a divide. (Normalizing the array itself instead looks
     * equivalent but is a trap: CollapseProject inlines the norm into the
     * transform lambda and recomputes sqrt(dot(e,e)) PER ELEMENT.)
+    * `carry` columns of `df` ride along after the norm.
     */
-  private[ext] def normalizedRel(df: DataFrame, idCol: String, embCol: String, id: String, vec: String): DataFrame = {
+  private[ext] def normalizedRel(
+      df: DataFrame, idCol: String, embCol: String, id: String, vec: String,
+      carry: Column*): DataFrame = {
     // register on the frame's OWN session — SparkSession.active may be a
     // different session in multi-session apps
     graft.functions.VectorExpressions.register(df.sparkSession)
     val nCol = vec + "_n"
     df.withColumn("__e", toDouble(col(embCol)))
-      .select(col(idCol).as(id), col("__e").as(vec), norm(col("__e")).as(nCol))
+      .select((Seq(col(idCol).as(id), col("__e").as(vec), norm(col("__e")).as(nCol)) ++ carry): _*)
   }
 
   /** Brute-force top-k cosine neighbors for each query vector (excluding
@@ -134,30 +137,13 @@ object Similarity {
     cent
   }
 
-  /** IVF (inverted-file) approximate top-k: centroids seed from a
-    * deterministic corpus sample (every strideth vector), optionally
-    * refined with `trainIters` Lloyd iterations; each corpus vector is
-    * assigned to its nearest centroid cell once; each query probes its
-    * nProbe nearest cells and brute-forces only those. Recall is tunable
-    * via nProbe/stride; SimilaritySpec asserts exhaustive-probe ≡ brute
-    * force and trained-centroid recall ≥ the raw-sample baseline. At
-    * 100 TB the centroid set is trained once and persisted — here it
-    * stays a lazy subplan for the oracle harness.
-    *
-    * `trainOn`: optional BOUNDED training relation for the Lloyd
-    * refinement — the production recipe (FAISS trains k-means on a
-    * sample, never the corpus). With a ~c·√N sample, training costs
-    * O(c·√N·√N) = O(c·N) — LINEAR — and the only remaining N×√N pass is
-    * the final corpus→cell assignment, i.e. the one-time index build
-    * that production amortizes by persisting the index. Default (None)
-    * trains on the full corpus: the exact-oracle form q40/q302 pin.
-    */
   /** The battery-wide coarse-quantizer recipe: modular √N-style seed from
     * the corpus, optionally Lloyd-refined on `trainOn` (a bounded sample —
     * the production FAISS recipe) or, by default, on the full corpus (the
-    * exact-oracle form). Shared by [[ivfTopK]], [[assignCells]],
-    * [[simplifiedSilhouette]], and [[IvfIndex.build]] so the lazy and the
-    * persisted index are the same artifact bit-for-bit.
+    * exact-oracle form). Shared by [[ivfTopK]], [[ivfPqTopK]]'s probe
+    * seed, [[assignCells]], [[simplifiedSilhouette]], and
+    * [[IvfIndex.build]] so the lazy and the persisted index are the same
+    * artifact bit-for-bit.
     */
   private[ext] def centroidsOf(
       corpus: DataFrame, idCol: String, embCol: String,
@@ -179,8 +165,8 @@ object Similarity {
     * (the hash gate would catch it, but only a round later). `q` is a
     * normalizedRel (qid, qe, qe_n); `cent` a centroid relation (cent_id,
     * cent_e, cent_e_n). Returns (qid, qe, qe_n, cent_id).
-    */
-  /** `carryQuery=false` drops the query vector/norm BEFORE the probe
+    *
+    * `carryQuery=false` drops the query vector/norm BEFORE the probe
     * window's hash(qid) exchange — callers that only need (qid, cent_id)
     * (the ADC paths, which rebuild their LUT from the query relation
     * directly) must not shuffle nQueries × nCells dim-length arrays the
@@ -215,6 +201,24 @@ object Similarity {
       .filter(col("rn") <= k)
   }
 
+  /** IVF (inverted-file) approximate top-k: centroids seed from a
+    * deterministic corpus sample (every strideth vector), optionally
+    * refined with `trainIters` Lloyd iterations; each corpus vector is
+    * assigned to its nearest centroid cell once; each query probes its
+    * nProbe nearest cells and brute-forces only those. Recall is tunable
+    * via nProbe/stride; SimilaritySpec asserts exhaustive-probe ≡ brute
+    * force and trained-centroid recall ≥ the raw-sample baseline. At
+    * 100 TB the centroid set is trained once and persisted — here it
+    * stays a lazy subplan for the oracle harness.
+    *
+    * `trainOn`: optional BOUNDED training relation for the Lloyd
+    * refinement — the production recipe (FAISS trains k-means on a
+    * sample, never the corpus). With a ~c·√N sample, training costs
+    * O(c·√N·√N) = O(c·N) — LINEAR — and the only remaining N×√N pass is
+    * the final corpus→cell assignment, i.e. the one-time index build
+    * that production amortizes by persisting the index. Default (None)
+    * trains on the full corpus: the exact-oracle form q40/q302 pin.
+    */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, embCol: String,
       k: Int, stride: Int, nProbe: Int, trainIters: Int = 0,
@@ -293,12 +297,54 @@ object Similarity {
   def sqrtStride(corpusSize: Long): Int =
     math.max(1L, math.round(math.sqrt(corpusSize.toDouble))).toInt
 
+  /** The within-cell cosine pair rule — the ONE definition behind every
+    * semantic near-duplicate path: [[semanticPairs]], [[nearDupPairs]],
+    * and the persisted index's pair scan and pair maintenance
+    * ([[IvfIndex.serveSemDedup]], [[IvfIndex.buildPairs]],
+    * [[IvfIndex.refresh]]). `a` and `b` are (cid, ce, ce_n, cent_id)
+    * relations; two rows meet only through the equi-join on cent_id, score
+    * the carried-norm cosine, and survive at cos ≥ threshold. Returns
+    * (a_id, b_id, cos) with a_id < b_id.
+    *
+    * The join predicate follows from the inputs: the same relation on
+    * both sides is a self-join, which `a.cid < b.cid` reduces to each pair
+    * once; two different relations must hold disjoint ids (a refresh
+    * delta against the live inverted file), so every cross pair counts
+    * once and is canonicalized with least/greatest (cos is symmetric — the
+    * same index-ascending products either way).
+    */
+  private[ext] def withinCellPairs(a: DataFrame, b: DataFrame, threshold: Double): DataFrame = {
+    val (aId, bId) = (col("a.cid"), col("b.cid"))
+    val (order, lo, hi) =
+      if (a.sameSemantics(b)) (aId < bId, aId, bId)
+      else (aId =!= bId, least(aId, bId), greatest(aId, bId))
+    a.as("a")
+      .join(b.as("b"), col("a.cent_id") === col("b.cent_id") && order)
+      .select(lo.as("a_id"), hi.as("b_id"),
+        (dot(col("a.ce"), col("b.ce")) / (col("a.ce_n") * col("b.ce_n"))).as("cos"))
+      .filter(col("cos") >= threshold)
+  }
+
+  /** The pair stage of [[semanticDedup]], exposed so its plan shape can
+    * be pinned (the CC stage checkpoints eagerly, hiding this subplan
+    * from the composed query's explain): [[withinCellPairs]] over the
+    * corpus's cell assignment, where the cell equi-join is the ONLY place
+    * two corpus rows ever meet.
+    */
+  def semanticPairs(
+      corpus: DataFrame, idCol: String, embCol: String,
+      stride: Int, trainIters: Int, threshold: Double,
+      trainOn: Option[DataFrame] = None): DataFrame = {
+    val assigned = assignCells(corpus, idCol, embCol, stride, trainIters, trainOn)
+    withinCellPairs(assigned, assigned, threshold)
+  }
+
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): coarse k-means cells bound the pair search, then
-    * within-cell cosine ≥ threshold pairs are clustered (connected
-    * components) and each cluster keeps its min-id representative.
-    * Returns the full decision table (id, cluster_id, keep) — callers
-    * filter keep to drop semantic duplicates.
+    * within-cell cosine ≥ threshold pairs ([[semanticPairs]]) are
+    * clustered and each cluster keeps its min-id representative
+    * ([[Dedup.decisionTable]]). Returns the full decision table (id,
+    * cluster_id, keep) — callers filter keep to drop semantic duplicates.
     *
     * Scale: the all-pairs term only exists INSIDE a cell (O(Σ cell²)),
     * cells shrink as centroids grow, and everything else is the
@@ -314,29 +360,10 @@ object Similarity {
     * centroids (train on a sample, fixed k sized to the cluster — the
     * build is then amortized and the recurring cost is one N×k assign
     * pass), and feed the pair relation straight into
-    * [[Dedup.connectedComponents]] with a durable checkpointDir.
-    */
-  /** The pair stage of [[semanticDedup]], exposed so its plan shape can
-    * be pinned (the CC stage checkpoints eagerly, hiding this subplan
-    * from the composed query's explain): within-cell cosine ≥ threshold
-    * pairs, where the cell equi-join is the ONLY place two corpus rows
-    * ever meet.
-    */
-  def semanticPairs(
-      corpus: DataFrame, idCol: String, embCol: String,
-      stride: Int, trainIters: Int, threshold: Double,
-      trainOn: Option[DataFrame] = None): DataFrame = {
-    val assigned = assignCells(corpus, idCol, embCol, stride, trainIters, trainOn)
-    assigned.as("a")
-      .join(assigned.as("b"),
-        col("a.cent_id") === col("b.cent_id") && col("a.cid") < col("b.cid"))
-      .select(
-        col("a.cid").as("a_id"), col("b.cid").as("b_id"),
-        (dot(col("a.ce"), col("b.ce")) / (col("a.ce_n") * col("b.ce_n"))).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** `trainOn`: optional BOUNDED training relation for the Lloyd
+    * [[Dedup.connectedComponents]] with a durable `graft.checkpoint.dir`
+    * ([[graft.ops.Ckpt]]).
+    *
+    * `trainOn`: optional BOUNDED training relation for the Lloyd
     * refinement, exactly as on [[ivfTopK]] — the 100 TB posture (train the
     * coarse cells on a ~c·√N sample, O(c·N) = LINEAR, instead of the
     * full-corpus O(N^1.5) Lloyd; persist the centroids) made executable
@@ -348,17 +375,9 @@ object Similarity {
   def semanticDedup(
       corpus: DataFrame, idCol: String, embCol: String,
       stride: Int, trainIters: Int, threshold: Double,
-      trainOn: Option[DataFrame] = None): DataFrame = {
-    val pairs = semanticPairs(corpus, idCol, embCol, stride, trainIters, threshold, trainOn)
-    val clusters = Dedup.connectedComponents(pairs)
-      .select(col("doc_id").as("id"), col("cluster_id"))
-    corpus.select(col(idCol).as("id"))
-      .join(clusters, Seq("id"), "left")
-      .select(
-        col("id"),
-        coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-      .withColumn("keep", col("id") === col("cluster_id"))
-  }
+      trainOn: Option[DataFrame] = None): DataFrame =
+    Dedup.decisionTable(
+      semanticPairs(corpus, idCol, embCol, stride, trainIters, threshold, trainOn), corpus, idCol)
 
   /** Product-quantization (PQ) encoding (Jégou et al., "Product
     * quantization for nearest neighbor search", TPAMI 2011): each vector
@@ -399,26 +418,42 @@ object Similarity {
     */
   private[ext] def pqEncodeAgainst(
       v: DataFrame, cb: DataFrame, nSub: Int, subDim: Int): DataFrame = {
-    // native codegen'd slice distance (round 16): the aggregate-HOF form
-    // this replaces evaluated an interpreted lambda per element — jstack'd
-    // as the single dominant cost of every PQ encode. Bit-identical fold
-    // (ascending index from 0.0), so codes and oracles are unchanged.
-    graft.functions.VectorExpressions.register(v.sparkSession)
-    val subs = v.withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
-    val d2 = graft.functions.VectorExpressions.vecSliceSqDist(
-      col("ve"), col("ce"), (col("s") * subDim).cast("int"), lit(subDim))
-    val w = Window.partitionBy(col("vid"), col("s"))
-      .orderBy(col("d2").asc, col("code_id").asc)
-    val best = subs.crossJoin(broadcast(cb))
-      .select(col("vid"), col("s"), col("code_id"), d2.as("d2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val best = nearestCodewords(v, cb, "ce", nSub, subDim)
     val codeCols = (0 until nSub)
       .map(i => max(when(col("s") === i, col("code_id"))).as(s"code_$i"))
     val recon = sum(col("d2").cast(org.apache.spark.sql.types.DecimalType(38, 18)))
       .cast("double").as("recon")
     best.groupBy(col("vid"))
       .agg(codeCols.head, (codeCols.tail :+ recon): _*)
+  }
+
+  /** The nearest codeword of every (vector, subspace) — the ONE PQ
+    * assignment rule, shared by [[pqEncodeAgainst]] and
+    * [[trainSubCodebooks]], because train and encode must share the
+    * metric bit-for-bit. `v` is (vid, ve double[]) and `cb` (code_id,
+    * `cbVec` double[]); each subspace `s` scores squared L2 over its
+    * slice and keeps rank 1 under the (d2 asc, code_id asc) tie-break.
+    * Returns (vid, s, code_id, carry…, d2, rn).
+    *
+    * The slice distance is the native codegen'd fold (round 16): the
+    * aggregate-HOF form it replaced evaluated an interpreted lambda per
+    * element — jstack'd as the single dominant cost of every PQ encode.
+    * Bit-identical fold (ascending index from 0.0), so codes and oracles
+    * are unchanged.
+    */
+  private def nearestCodewords(
+      v: DataFrame, cb: DataFrame, cbVec: String, nSub: Int, subDim: Int,
+      carry: Column*): DataFrame = {
+    graft.functions.VectorExpressions.register(v.sparkSession)
+    val subs = v.withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
+    val d2 = graft.functions.VectorExpressions.vecSliceSqDist(
+      col("ve"), col(cbVec), (col("s") * subDim).cast("int"), lit(subDim))
+    val w = Window.partitionBy(col("vid"), col("s"))
+      .orderBy(col("d2").asc, col("code_id").asc)
+    subs.crossJoin(broadcast(cb))
+      .select((Seq(col("vid"), col("s"), col("code_id")) ++ carry :+ d2.as("d2")): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
   }
 
   /** [[pqEncodeAgainst]] with caller-supplied relations in fixture terms —
@@ -465,19 +500,7 @@ object Similarity {
   def trainSubCodebooks(
       train: DataFrame, cb: DataFrame, nSub: Int, subDim: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // same native slice distance as pqEncodeAgainst — train and encode
-    // must share the metric bit-for-bit
-    graft.functions.VectorExpressions.register(train.sparkSession)
-    val subs = train.withColumn("s", explode(sequence(lit(0), lit(nSub - 1))))
-    val d2 = graft.functions.VectorExpressions.vecSliceSqDist(
-      col("ve"), col("cbe"), (col("s") * subDim).cast("int"), lit(subDim))
-    val w = Window.partitionBy(col("vid"), col("s"))
-      .orderBy(col("d2").asc, col("code_id").asc)
-    val best = subs.crossJoin(broadcast(cb))
-      .select(col("vid"), col("s"), col("code_id"), col("ve"), d2.as("d2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-    val means = best
+    val means = nearestCodewords(train, cb, "cbe", nSub, subDim, col("ve"))
       .select(col("s"), col("code_id"),
         posexplode(slice(col("ve"), (col("s") * subDim + 1).cast("int"), lit(subDim)))
           .as(Seq("p", "v")))
@@ -581,9 +604,7 @@ object Similarity {
       .select(col("cid"), col("cent_id"))
     val codes = pqEncode(corpus, idCol, embCol, nSub, subDim, codeStride)
     // probe: nProbe nearest cells per query against the seed centroids
-    val seed = normalizedRel(
-      corpus.filter(pmod(col(idCol), lit(cellStride)) === 0),
-      idCol, embCol, "cent_id", "cent_e")
+    val seed = centroidsOf(corpus, idCol, embCol, cellStride, 0, None)
     val q = normalizedRel(queries, idCol, embCol, "qid", "qe")
     val probes = probeNearestCells(q, seed, nProbe, carryQuery = false)
     val cb = corpus.filter(pmod(col(idCol), lit(codeStride)) === 0)
@@ -597,19 +618,10 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs, blocked on `blockCol` (e.g. a
     * label, an LSH bucket, or an IVF cell id) so only same-block pairs
-    * are scored.
+    * are scored: [[withinCellPairs]] with the block as the cell key.
     */
   def nearDupPairs(df: DataFrame, idCol: String, embCol: String, blockCol: String, threshold: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    val v = df.withColumn("__e", toDouble(col(embCol)))
-      .select(
-        col(idCol).as("id"), col(blockCol).as("blk"),
-        col("__e").as("e"), norm(col("__e")).as("n"))
-    v.as("a")
-      .join(v.as("b"), col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .select(
-        col("a.id").as("a_id"), col("b.id").as("b_id"),
-        (dot(col("a.e"), col("b.e")) / (col("a.n") * col("b.n"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    val v = normalizedRel(df, idCol, embCol, "cid", "ce", col(blockCol).as("cent_id"))
+    withinCellPairs(v, v, threshold)
   }
 }

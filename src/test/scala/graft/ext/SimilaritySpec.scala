@@ -76,6 +76,28 @@ class SimilaritySpec extends SparkSuite {
     assert(pairs == Set((0L, 1L))) // 0-3 colinear-negative is cross-label, 0-2 below threshold
   }
 
+  test("withinCellPairs: same-cell pairs only, a_id < b_id, kept at cos == threshold; cross form once per pair") {
+    // (cid, ce, ce_n, cent_id) built by hand: 3-4-5 vectors give exact
+    // cosines (24/25 = 0.96, 1.0, 0.8, 0.6)
+    def rel(rows: (Long, Seq[Double], Long)*) =
+      rows.map { case (id, e, cell) => (id, e, math.sqrt(e.map(x => x * x).sum), cell) }
+        .toDF("cid", "ce", "ce_n", "cent_id")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val existing = rel(
+      (1L, Seq(3.0, 4.0), 0L), (2L, Seq(4.0, 3.0), 0L), (3L, Seq(0.0, 1.0), 0L),
+      (4L, Seq(3.0, 4.0), 1L), (5L, Seq(3.0, 4.0), 1L))
+    // self form: (1,4) is cos 1 across cells and self-pairs are cos 1 —
+    // neither may appear; (1,2) sits exactly at the threshold
+    val self = pairs(Similarity.withinCellPairs(existing, existing, 0.96))
+    assert(self.sorted == Seq((1L, 2L, 0.96), (4L, 5L, 1.0)), self)
+    // cross form (a refresh delta against disjoint existing ids): delta 0
+    // is the smaller id of its pairs, delta 6 the larger; each pair once
+    val delta = rel((0L, Seq(4.0, 3.0), 0L), (6L, Seq(3.0, 4.0), 1L))
+    val cross = pairs(Similarity.withinCellPairs(delta, existing, 0.96))
+    assert(cross.sorted == Seq((0L, 1L, 0.96), (0L, 2L, 1.0), (4L, 6L, 1.0), (5L, 6L, 1.0)), cross)
+  }
+
   test("semanticDedup: same-cell colinear vectors collapse; distinct directions survive") {
     // stride=2 seeds centroids from ids 0 and 2; vectors 0,1 are
     // colinear (cos 1) and land in cell 0 → one cluster keeping id 0;

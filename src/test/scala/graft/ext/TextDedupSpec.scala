@@ -226,8 +226,11 @@ class TextDedupSpec extends SparkSuite {
     val local = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    val durable = Dedup.connectedComponents(pairs, checkpointDir = Some(dir.toString))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    // durability comes from the session's graft.checkpoint.dir (Ckpt)
+    spark.conf.set(graft.ops.Ckpt.ConfKey, dir.toString)
+    val durable =
+      try Dedup.connectedComponents(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      finally spark.conf.unset(graft.ops.Ckpt.ConfKey)
     assert(local.nonEmpty && durable == local)
     // reliable checkpoint actually wrote state to the durable dir
     val wrote = java.nio.file.Files.walk(dir).anyMatch(p => p.toFile.isFile)
